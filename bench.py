@@ -18,7 +18,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from uber_data_pipeline_spark.session import get_spark, scheduler_mode  # noqa: E402
+from uber_data_pipeline_spark.session import get_spark, scoped_session  # noqa: E402
 
 import __spark_entry__ as entrymod  # noqa: E402
 
@@ -300,50 +300,6 @@ def main() -> int:
 
         _clear_all(spark)
 
-        import threading
-
-        def _run_one(item):
-            name, fn = item
-            try:
-                # per-thread scheduler pool: the root FAIR scheduler
-                # shares task slots ACROSS pools, so giving each bench
-                # thread its own pool stops one thread's long
-                # multi-stage job from head-of-line blocking the other
-                # seven (local properties are per-Python-thread under
-                # pinned-thread mode, the PySpark default)
-                spark.sparkContext.setLocalProperty(
-                    "spark.scheduler.pool", f"bench-{threading.get_ident()}"
-                )
-                # same full-materialization action as the sequential pass
-                tq0 = time.perf_counter()
-                fn(spark, sf_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                concurrent_timings[name] = round(
-                    time.perf_counter() - tq0, 3
-                )
-                return None
-            except Exception as e:  # noqa: BLE001
-                return f"{name}: {e}"
-
-        # streaming entries pin shuffle.partitions / the state-store
-        # provider around .start() and restore a value read from a
-        # possibly-racing thread — results are unaffected (the pins
-        # only shape state layout), but the session conf can land
-        # wherever the last restore left it; snapshot + restore so
-        # the concurrent pass can't leak conf state past the bench
-        conf_keys = (
-            "spark.sql.shuffle.partitions",
-            "spark.sql.sources.partitionOverwriteMode",
-            "spark.sql.streaming.stateStore.providerClass",
-            # sources/pyds.register flips this on (it must stay on
-            # through the lazy read's action); restore it after
-            "spark.sql.python.filterPushdown.enabled",
-            "spark.sql.streaming.statefulOperator.allowMultiple",
-            # pool-aware spread cap set below for the concurrent pass
-            "spark.udp.spread.maxPartitions",
-        )
-        snapshot = {k: spark.conf.get(k, None) for k in conf_keys}
         # pool-aware spread (r13, VERDICT r12 item 1): under 8 in-flight
         # queries, each spread site expanding to cores*2 partitions
         # oversubscribes the 32 task slots 16x (measured: concurrent-8
@@ -355,17 +311,38 @@ def main() -> int:
         # to r11's 39.8 s is the 9 entries the registry grew since).
         cores = spark.sparkContext.defaultParallelism
         snapshot_cap = max(4, cores // 8)
-        spark.conf.set("spark.udp.spread.maxPartitions", str(snapshot_cap))
         # fair-share SHUFFLE width too (r13 A/B on this registry:
         # concurrent-8 wall 47.6 s at the session default 32 ->
         # 43.8 s at cores*2/8 -> 48.8 s at cores/8, so the shuffle
         # sweet spot is 2x the spread cap — keyed exchanges want a
         # little headroom over the slot share, round-robin spreads
         # don't). AQE still coalesces below this; it only caps the
-        # INITIAL width each in-flight query schedules.
-        spark.conf.set(
-            "spark.sql.shuffle.partitions", str(max(8, cores * 2 // 8))
+        # INITIAL width each in-flight query schedules. Both widths are
+        # set on a scoped child session that the concurrent pass and
+        # its spot gate run on, so the caller's session conf never moves.
+        cspark = scoped_session(
+            spark,
+            {
+                "spark.udp.spread.maxPartitions": snapshot_cap,
+                "spark.sql.shuffle.partitions": max(8, cores * 2 // 8),
+            },
         )
+
+        def _run_one(item):
+            name, fn = item
+            try:
+                # same full-materialization action as the sequential pass
+                tq0 = time.perf_counter()
+                fn(cspark, sf_dir).write.format("noop").mode(
+                    "overwrite"
+                ).save()
+                concurrent_timings[name] = round(
+                    time.perf_counter() - tq0, 3
+                )
+                return None
+            except Exception as e:  # noqa: BLE001
+                return f"{name}: {e}"
+
         # longest-processing-time-first: the makespan of an 8-slot
         # pool is set by whatever long job lands last; submit the
         # heavy entries (per the sequential timings just measured)
@@ -384,13 +361,13 @@ def main() -> int:
         # concurrent-pass correctness spot-gate (r13, VERDICT r12 item
         # 6): the pool above runs 219 queries through 8 threads but
         # only counts ERRORS — an interleaving-dependent state bug
-        # (the streaming-conf-lock class: a thread reading session
-        # conf another thread pinned) would return WRONG ROWS
-        # silently, and the sequential oracle never sees that
-        # schedule. Re-run a rotating ~10-entry slice concurrently
-        # with full value hashes against sequential references taken
-        # seconds earlier on the same session + conf. Rotation by
-        # calendar day so successive rounds cover different slices.
+        # (shared per-session state one thread mutates while another
+        # plans) would return WRONG ROWS silently, and the sequential
+        # oracle never sees that schedule. Re-run a rotating ~10-entry
+        # slice concurrently with full value hashes against sequential
+        # references taken seconds earlier on the same scoped session.
+        # Rotation by calendar day so successive rounds cover
+        # different slices.
         try:
             import hashlib
 
@@ -413,18 +390,14 @@ def main() -> int:
             ref_hashes: dict[str, str] = {}
             for s_name in spot:
                 ref_hashes[s_name] = _vhash(
-                    entrymod.queries()[s_name](spark, sf_dir).toPandas()
+                    entrymod.queries()[s_name](cspark, sf_dir).toPandas()
                 )
                 _clear_all(spark)
 
             def _spot_one(s_name):
                 try:
-                    spark.sparkContext.setLocalProperty(
-                        "spark.scheduler.pool",
-                        f"spot-{threading.get_ident()}",
-                    )
                     h = _vhash(
-                        entrymod.queries()[s_name](spark, sf_dir).toPandas()
+                        entrymod.queries()[s_name](cspark, sf_dir).toPandas()
                     )
                     return s_name, h == ref_hashes[s_name]
                 except Exception:  # noqa: BLE001
@@ -435,14 +408,6 @@ def main() -> int:
         except Exception:  # noqa: BLE001 — the gate must not kill the bench
             pass
 
-        for k, v in snapshot.items():
-            if v is None:
-                try:
-                    spark.conf.unset(k)
-                except Exception:  # noqa: BLE001
-                    pass
-            else:
-                spark.conf.set(k, v)
         _clear_all(spark)
     except Exception:  # noqa: BLE001
         pass
@@ -469,7 +434,6 @@ def main() -> int:
                 ),
                 "load_before": load_before,
                 "load_after": load_after,
-                "scheduler": scheduler_mode(),
                 "concurrent_wall_s": concurrent_wall,
                 "concurrent_workers": 8,
                 "concurrent_errors": concurrent_errors,
@@ -499,7 +463,6 @@ def main() -> int:
                     for n, r in all_reps.items()
                 },
                 "sf": sf_val,
-                "scheduler": scheduler_mode(),
                 "estimator": "min (since r12; medians field for pre-r12 comparability)",
                 "load_before": load_before,
                 "load_after": load_after,

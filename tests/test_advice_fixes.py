@@ -115,45 +115,10 @@ def test_token_packing_fill_micro_non_divisor_budget(spark, duck):
     assert got == want
 
 
-def test_scheduler_default_is_fifo_and_fair_wiring_exists(spark):
-    """Pins the r7 SCHED_AB.md decision: FIFO default (it beat
-    properly-wired FAIR on BOTH sequential and 8-way concurrent
-    makespan), with the FAIR allocation file packaged so the opt-in
-    path stays functional (a bare scheduler.mode=FAIR leaves the
-    default pool internally FIFO - the r5/r6 no-op)."""
-    import os
-
-    import uber_data_pipeline_spark
-
+def test_scheduler_default_is_fifo(spark):
+    """Pins the r7 SCHED_AB.md decision: FIFO (it beat properly-wired
+    FAIR on BOTH sequential and 8-way concurrent makespan)."""
     assert spark.sparkContext.getConf().get("spark.scheduler.mode") == "FIFO"
-    alloc = os.path.join(
-        os.path.dirname(uber_data_pipeline_spark.__file__), "fairscheduler.xml"
-    )
-    assert os.path.exists(alloc)
-    with open(alloc) as fh:
-        body = fh.read()
-    assert '<pool name="default">' in body
-    assert "<schedulingMode>FAIR</schedulingMode>" in body
-
-
-def test_scheduler_mode_stamp_matches_session_sanitization(monkeypatch):
-    """ADVICE r7: bench.py stamps its output via session.scheduler_mode,
-    the SAME normalization get_spark applies — an invalid env value
-    must record FIFO (what actually ran), not the raw garbage."""
-    from uber_data_pipeline_spark.session import scheduler_mode
-
-    monkeypatch.setenv("SPARK_GRAFT_SCHEDULER", "fair")
-    assert scheduler_mode() == "FAIR"
-    monkeypatch.setenv("SPARK_GRAFT_SCHEDULER", "yes-please")
-    assert scheduler_mode() == "FIFO"
-    monkeypatch.delenv("SPARK_GRAFT_SCHEDULER")
-    assert scheduler_mode() == "FIFO"
-    # bench.py must stamp through this function, not the raw env
-    import inspect
-
-    import bench
-
-    assert "scheduler_mode()" in inspect.getsource(bench.main)
 
 
 # ---------------------------------------------------------- r8 ADVICE

@@ -439,19 +439,3 @@ def test_pq_seed_codes_ranked_before_explode(spark):
     assert set(by_s) == {0, 1, 2, 3}
     for codes in by_s.values():
         assert sorted(codes) == list(range(8))
-
-
-def test_uncompressed_cache_scope_restores_and_serializes(spark):
-    """The conf flip is restored on error and nested/concurrent use
-    can never record a temporary 'false' as the previous value."""
-    import pytest
-
-    from uber_data_pipeline_spark.queries.tpch_extra import _uncompressed_cache
-
-    key = "spark.sql.inMemoryColumnarStorage.compressed"
-    spark.conf.set(key, "true")
-    with pytest.raises(RuntimeError):
-        with _uncompressed_cache(spark):
-            assert spark.conf.get(key) == "false"
-            raise RuntimeError("boom")
-    assert spark.conf.get(key) == "true"

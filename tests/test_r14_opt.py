@@ -6,9 +6,9 @@ rewrites of this round stay pinned.
 2. kmv_intersection on a fully-empty input returns 0, not NULL, for
    exact_a/exact_b (ADVICE r13 — SUM over zero rows).
 3. merge_upsert_partitioned derives swap targets by LISTING the
-   staging dir, so partition values whose dir names Spark escapes
-   (spaces -> %20 etc.) merge correctly instead of silently deleting
-   the target partition (ADVICE r13, latent class).
+   staging dir, so partition values whose dir names Spark
+   Hive-escapes (":" -> %3A, "%" -> %25) merge correctly instead of
+   silently deleting the target partition (ADVICE r13, latent class).
 """
 
 import os
@@ -74,9 +74,10 @@ def test_kmv_empty_input_exact_counts_are_zero(spark):
 
 
 def test_merge_upsert_handles_escaped_partition_names(spark):
-    """A partition value Spark writes Hive-escaped (here: a space)
-    must swap correctly — the listing-driven swap can't miss it the
-    way value-formatted paths did."""
+    """A partition value Spark writes Hive-escaped (here ":" and "%",
+    stored as dir part=a%3Ab%25) must swap correctly — the
+    listing-driven swap can't miss it the way value-formatted paths
+    did."""
     from uber_data_pipeline_spark.sources.writers import (
         merge_upsert_partitioned,
     )
@@ -84,12 +85,13 @@ def test_merge_upsert_handles_escaped_partition_names(spark):
     path = os.path.join(ART, "merge_escape_unit")
     shutil.rmtree(path, ignore_errors=True)
     base = spark.createDataFrame(
-        [(1, "a b", "old"), (2, "a b", "old"), (3, "plain", "old")],
+        [(1, "a:b%", "old"), (2, "a:b%", "old"), (3, "plain", "old")],
         "k long, part string, val string",
     )
     base.repartition(1).write.partitionBy("part").parquet(path)
+    assert "part=a%3Ab%25" in os.listdir(path)
     changes = spark.createDataFrame(
-        [(1, "a b", "new"), (9, "a b", "new")],
+        [(1, "a:b%", "new"), (9, "a:b%", "new")],
         "k long, part string, val string",
     )
     merge_upsert_partitioned(spark, path, changes, ["k"], "part")
@@ -98,9 +100,9 @@ def test_merge_upsert_handles_escaped_partition_names(spark):
         (r["k"], r["part"], r["val"]) for r in after.collect()
     }
     assert got == {
-        (1, "a b", "new"),
-        (9, "a b", "new"),
-        (2, "a b", "old"),
+        (1, "a:b%", "new"),
+        (9, "a:b%", "new"),
+        (2, "a:b%", "old"),
         (3, "plain", "old"),
     }
     shutil.rmtree(path, ignore_errors=True)

@@ -126,3 +126,31 @@ def test_merge_upsert_touches_only_changed_partitions(spark):
     assert after.count() == 1001  # 1000 - 2 replaced + 2 new + 1 insert
     assert after.filter("val = 'new'").count() == 3
     assert after.filter("k = 0 AND val = 'old'").count() == 0
+
+
+def test_merge_upsert_keeps_null_partition_rows(spark):
+    """A change batch that touches the NULL (default) partition must
+    merge into it: a NULL-partition target row whose key is not in the
+    change set survives, and the other partitions are untouched."""
+    from uber_data_pipeline_spark.sources.writers import merge_upsert_partitioned
+
+    path = os.path.join(ART, "merge_upsert_null_part")
+    shutil.rmtree(path, ignore_errors=True)
+    base = spark.createDataFrame(
+        [(1, None, "old"), (2, None, "old"), (3, 7, "old")],
+        "k long, part int, val string",
+    )
+    base.repartition(1).write.partitionBy("part").parquet(path)
+    assert "part=__HIVE_DEFAULT_PARTITION__" in os.listdir(path)
+    changes = spark.createDataFrame(
+        [(1, None, "new"), (4, None, "new")], "k long, part int, val string"
+    )
+    merge_upsert_partitioned(spark, path, changes, ["k"], "part")
+    got = {(r.k, r.part, r.val) for r in spark.read.parquet(path).collect()}
+    assert got == {
+        (1, None, "new"),
+        (2, None, "old"),
+        (3, 7, "old"),
+        (4, None, "new"),
+    }
+    shutil.rmtree(path, ignore_errors=True)

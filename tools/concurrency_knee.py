@@ -7,11 +7,11 @@ helping on one 32-slot local executor.
 Methodology = SCHED_AB.md / bench.py's concurrent pass exactly: the
 FULL registry through an N-thread pool, one noop-sink write per
 entry, longest-processing-time-first submission (per the committed
-bench_detail.json sequential timings), per-thread scheduler pool
-tags, conf snapshot/restore around the sweep, FIFO scheduler (the
-session default). One warm sequential prime pass at the target SF so
-plan compilation isn't billed to the first cell; cells run
-back-to-back on one SparkSession.
+bench_detail.json sequential timings), fair-share widths on a
+scoped child session per cell, FIFO scheduler (the session
+default). One warm sequential prime pass at the target SF so plan
+compilation isn't billed to the first cell; cells run back-to-back
+on one SparkSession.
 
 Usage:
     python tools/concurrency_knee.py [out_json] [workers ...]
@@ -26,26 +26,16 @@ import json
 import os
 import subprocess
 import sys
-import threading
 import time
 from concurrent.futures import ThreadPoolExecutor
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from uber_data_pipeline_spark.session import get_spark  # noqa: E402
+from uber_data_pipeline_spark.session import get_spark, scoped_session  # noqa: E402
 
 import __spark_entry__ as entrymod  # noqa: E402
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-
-CONF_KEYS = (
-    "spark.sql.shuffle.partitions",
-    "spark.sql.sources.partitionOverwriteMode",
-    "spark.sql.streaming.stateStore.providerClass",
-    "spark.sql.python.filterPushdown.enabled",
-    "spark.sql.streaming.statefulOperator.allowMultiple",
-    "spark.udp.spread.maxPartitions",
-)
 
 
 def _bench_secs() -> dict[str, float]:
@@ -85,10 +75,7 @@ def main() -> int:
     def _run_one(item):
         name, fn = item
         try:
-            spark.sparkContext.setLocalProperty(
-                "spark.scheduler.pool", f"knee-{threading.get_ident()}"
-            )
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+            fn(cspark, sf_dir).write.format("noop").mode("overwrite").save()
             return None
         except Exception as e:  # noqa: BLE001
             return f"{name}: {e}"
@@ -96,32 +83,24 @@ def main() -> int:
     cells: dict = {}
     cores = spark.sparkContext.defaultParallelism
     for n in workers:
-        snapshot = {k: spark.conf.get(k, None) for k in CONF_KEYS}
-        # pool-aware spread cap, mirroring bench.py's concurrent pass
-        # (r13): each in-flight query gets its exact fair share of the
-        # slots (cores/n beat cores*2/n AND spread-off in the r13 A/B)
-        spark.conf.set(
-            "spark.udp.spread.maxPartitions", str(max(4, cores // n))
-        )
-        # fair-share shuffle width, 2x the spread cap (r13 A/B:
-        # 47.6 s at the default 32 -> 43.8 s at cores*2/8 -> 48.8 s
-        # at cores/8 on the 226-entry registry, concurrent-8)
-        spark.conf.set(
-            "spark.sql.shuffle.partitions", str(max(8, cores * 2 // n))
+        # mirroring bench.py's concurrent pass (r13): each in-flight
+        # query's spread cap is its exact fair share of the slots
+        # (cores/n beat cores*2/n AND spread-off in the r13 A/B), and
+        # its shuffle width 2x that (r13 A/B: 47.6 s at the default 32
+        # -> 43.8 s at cores*2/8 -> 48.8 s at cores/8 on the
+        # 226-entry registry, concurrent-8)
+        cspark = scoped_session(
+            spark,
+            {
+                "spark.udp.spread.maxPartitions": max(4, cores // n),
+                "spark.sql.shuffle.partitions": max(8, cores * 2 // n),
+            },
         )
         spark.catalog.clearCache()
         t0 = time.perf_counter()
         with ThreadPoolExecutor(max_workers=n) as pool:
             errs = [r for r in pool.map(_run_one, ordered) if r]
         wall = round(time.perf_counter() - t0, 3)
-        for k, v in snapshot.items():
-            try:
-                if v is None:
-                    spark.conf.unset(k)
-                else:
-                    spark.conf.set(k, v)
-            except Exception:  # noqa: BLE001
-                pass
         cells[str(n)] = {
             "wall_s": wall,
             "errors": len(errs),

@@ -40,12 +40,10 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     tune_runtime(spark)
     path = os.path.join(sf_dir, f"{name}.parquet")
     if name == "events":
-        # events.ts has shipped as both TIMESTAMP(NANOS) — which
-        # Spark's vectorized reader rejects outright without the
-        # nanosAsLong escape hatch — and TIMESTAMP(MICROS).
+        # events.ts has shipped as both TIMESTAMP(NANOS) — read as a
+        # long under tune_runtime's nanosAsLong — and TIMESTAMP(MICROS).
         # normalize_events() reconciles either encoding to plain
         # microsecond TIMESTAMP so oracle comparisons line up.
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         return normalize_events(spark.read.parquet(path))
     return spark.read.parquet(path)
 

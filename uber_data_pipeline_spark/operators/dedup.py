@@ -527,6 +527,12 @@ def write_lsh_index(docs: DataFrame, index_dir: str) -> None:
 # executor task. Above it, the distributed min-label loop runs.
 CC_LOCAL_EDGE_LIMIT = 5_000_000
 
+# Width of each min-label round's join shuffles. Per-round latency is
+# stage/task overhead x rounds, so the rounds are sized to the
+# (reduced) label table, not the session default; on a cluster scale
+# this with edge count.
+CC_ROUND_PARTITIONS = 8
+
 
 def connected_components(
     pairs: DataFrame,
@@ -591,16 +597,7 @@ def connected_components(
         .agg(F.least(F.col("src"), F.min("dst")).alias("label"))
         .select(F.col("src").alias("node"), "label")
     )
-    spark = pairs.sparkSession
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    # per-round latency is stage/task overhead x rounds: size the label
-    # shuffles to the (reduced) label table, not the session default —
-    # on a cluster scale this with edge count
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        labels = _propagate_min_labels(edges, labels, telemetry)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    labels = _propagate_min_labels(edges, labels, telemetry)
     sizes = labels.groupBy("label").agg(F.count("*").alias("cluster_size"))
     return (
         labels.join(sizes, "label")
@@ -665,10 +662,10 @@ def _propagate_min_labels(
     while True:
         aug = edges.unionByName(
             labels.select(F.col("node").alias("src"), F.col("label").alias("dst"))
-        )
+        ).repartition(CC_ROUND_PARTITIONS, "dst")
         dst_labels = labels.select(
             F.col("node").alias("dst_n"), F.col("label").alias("dst_label")
-        )
+        ).repartition(CC_ROUND_PARTITIONS, "dst_n")
         new_labels = (
             aug.join(dst_labels, aug.dst == dst_labels.dst_n)
             .groupBy("src")

@@ -15,9 +15,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-import contextlib
-import threading
-
 from uber_data_pipeline_spark.catalog import load_table
 from uber_data_pipeline_spark.operators import temporal
 from uber_data_pipeline_spark.operators.shares import (
@@ -876,20 +873,19 @@ def parts_pagerank_iterated(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sets, one |E|-row shuffle instead of two. Each iteration is
     # then exactly one broadcast join + one explode + one partial
     # aggregate.
-    # uncompressed cache: columnar codecs buy ~nothing on high-entropy
-    # bigint neighbor arrays but triple the materialization wall (see
-    # _uncompressed_cache)
-    with _uncompressed_cache(li.sparkSession):
-        deg = (
-            pairs.groupBy("src")
-            .agg(F.collect_set("dst").alias("dsts"))
-            .selectExpr(
-                "src",
-                "CAST(1.0 / size(dsts) AS DECIMAL(13,12)) AS recip",
-                "dsts",
-            )
-            .cache()
+    # the cache is uncompressed (session.tune_runtime): columnar codecs
+    # buy ~nothing on high-entropy bigint neighbor arrays but triple the
+    # materialization wall
+    deg = (
+        pairs.groupBy("src")
+        .agg(F.collect_set("dst").alias("dsts"))
+        .selectExpr(
+            "src",
+            "CAST(1.0 / size(dsts) AS DECIMAL(13,12)) AS recip",
+            "dsts",
         )
+        .cache()
+    )
     ranks = None  # r0 = 1.0 implicitly
     prev = None
     for _ in range(PAGERANK_ITERS):
@@ -1289,32 +1285,6 @@ def sql_orders_forecast_holt() -> str:
     )
 
 
-# serializes the conf-flip window below: spark.conf is session-scoped,
-# not thread-local, and bench.py's concurrent mode runs entries from a
-# thread pool over ONE session — without the lock, thread B could read
-# thread A's temporary 'false' as its _prev and "restore" it forever
-_CACHE_CONF_LOCK = threading.Lock()
-
-
-@contextlib.contextmanager
-def _uncompressed_cache(spark: SparkSession):
-    """Scope within which cache() captures compression=OFF: columnar
-    codecs buy ~nothing on high-entropy bigint neighbor arrays but
-    cost 3x the materialization wall (52s vs 18s at 50x, measured on
-    the LPA adjacency). The flag is captured when cache() is CALLED,
-    so the set-and-restore window only needs to cover plan wrapping —
-    try/finally restores on any error, and the lock makes the window
-    atomic under bench.py's shared-session thread pool (r11 review)."""
-    key = "spark.sql.inMemoryColumnarStorage.compressed"
-    with _CACHE_CONF_LOCK:
-        prev = spark.conf.get(key, "true")
-        spark.conf.set(key, "false")
-        try:
-            yield
-        finally:
-            spark.conf.set(key, prev)
-
-
 LPA_ITERS = 4
 
 
@@ -1370,15 +1340,14 @@ def _lpa_from_lineitem(li: DataFrame, iters: int | None = None) -> DataFrame:
     # map-side), fusing the former distinct + collect_list pair of
     # |E|-row shuffles into one — the adjacency build was 60% of the
     # 50x wall (r11 profile: 62.6s of 107s).  The cache is
-    # materialized UNCOMPRESSED (see _uncompressed_cache: 52s
-    # compressed vs 18s raw at 50x; localCheckpoint 33s, parquet
-    # restage 22s — the raw columnar cache wins).
-    with _uncompressed_cache(li.sparkSession):
-        adj = (
-            pairs.groupBy("src")
-            .agg(F.collect_set("dst").alias("nbrs"))
-            .cache()
-        )
+    # materialized UNCOMPRESSED (session.tune_runtime: 52s compressed
+    # vs 18s raw at 50x; localCheckpoint 33s, parquet restage 22s —
+    # the raw columnar cache wins).
+    adj = (
+        pairs.groupBy("src")
+        .agg(F.collect_set("dst").alias("nbrs"))
+        .cache()
+    )
     labels = (
         li.select(F.col("l_partkey").alias("v"))
         .distinct()

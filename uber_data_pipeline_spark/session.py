@@ -27,13 +27,39 @@ EXCLUDED_OPTIMIZER_RULES = (
 def tune_runtime(spark: SparkSession) -> SparkSession:
     """Runtime (SQLConf-level) tuning that must hold even when the
     caller owns the SparkSession (the round driver builds a vanilla
-    one) — applied from catalog.load_table so every query path gets
-    it regardless of session factory."""
+    one) — applied from catalog.load_table and the source readers so
+    every query path gets it regardless of session factory. This
+    module is the only place the engine sets session conf."""
     spark.conf.set("spark.sql.optimizer.excludedRules", EXCLUDED_OPTIMIZER_RULES)
     # deterministic tz so NTZ->TIMESTAMP casts and timestamp math match
     # the oracle even when the caller's session didn't pin it
     spark.conf.set("spark.sql.session.timeZone", "UTC")
+    # events.ts has shipped as TIMESTAMP(NANOS), which the vectorized
+    # reader rejects without this; readers.normalize_events reconciles
+    # the long back to a microsecond TIMESTAMP
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    # the snapshot python data source pushes filters; Spark rejects
+    # pushFilters unless this is on when the lazy read's action runs
+    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
+    # columnar cache codecs buy ~nothing on the engine's high-entropy
+    # bigint/array caches: the LPA adjacency materialized in 52 s
+    # compressed vs 18 s raw at 50x, and the 26 caching entries ran
+    # 4% faster in sum at sf0.1 on 4 cores with every cache uncompressed
+    spark.conf.set("spark.sql.inMemoryColumnarStorage.compressed", "false")
     return spark
+
+
+def scoped_session(spark: SparkSession, conf: dict) -> SparkSession:
+    """A child session (shared SparkContext and cache; own temp views
+    and SQLConf, which starts from the SparkContext's conf plus
+    tune_runtime, not from ``spark``'s runtime settings) with ``conf``
+    set on it only — for the one plan that needs a width or semantics
+    flag the session default must not carry, so concurrent plans on
+    ``spark`` never see it."""
+    child = tune_runtime(spark.newSession())
+    for key, value in conf.items():
+        child.conf.set(key, str(value))
+    return child
 
 
 def _default_driver_mem() -> str:
@@ -52,15 +78,6 @@ def _default_driver_mem() -> str:
     return f"{max(2, min(24, int(total_gib // 2)))}g"
 
 
-def scheduler_mode() -> str:
-    """The scheduler actually used: SPARK_GRAFT_SCHEDULER sanitized to
-    FAIR/FIFO (anything else means FIFO). bench.py stamps its output
-    with this same function so recorded metadata can't disagree with
-    the session config."""
-    mode = os.environ.get("SPARK_GRAFT_SCHEDULER", "FIFO").upper()
-    return mode if mode in ("FAIR", "FIFO") else "FIFO"
-
-
 def get_spark(
     app_name: str = "uber-data-pipeline-spark",
     master: str | None = None,
@@ -68,11 +85,10 @@ def get_spark(
 ) -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or f"local[{cpus}]"
-    scheduler = scheduler_mode()
     if shuffle_partitions is None:
         shuffle_partitions = int(os.environ.get("SPARK_SHUFFLE_PARTITIONS", cpus))
 
-    builder = (
+    return (
         SparkSession.builder.appName(app_name)
         .master(master)
         # AQE: runtime partition coalescing, skew-join splitting,
@@ -80,38 +96,9 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # parallelismFirst stays TRUE (Spark's default) after a full
-        # 227-entry A/B (r14): flipping it false — the byte-derived
-        # reduce width Spark's tuning doc suggests for pure-ETL
-        # shuffles — read 220.2 s vs 180.1 s sequential and 52.2 vs
-        # 42.9 s concurrent-8 on this suite, because our reduce
-        # stages are COMPUTE-dense at small bytes (LPA/pagerank vote
-        # aggregates, shingle self-joins, cell-local gemms): AQE
-        # coalesced them to 1-2 tasks and serialized the CPU. Worst:
-        # parts_label_propagation 3.4 -> 12.6 s, dedup_lsh_tuning
-        # 1.9 -> 8.2 s; the wins it bought elsewhere were < 0.3 s
-        # each. Env knob for deployments whose reduce stages are
-        # byte-bound (classic ETL at 100 TB), where false is right.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.parallelismFirst",
-            os.environ.get("SPARK_AQE_PARALLELISM_FIRST", "true"),
-        )
+        # parallelismFirst: Spark's true kept (r14 A/B 180.1 s vs 220.2 s false)
+        # preferSortMergeJoin: Spark's true kept (r14 A/B 180.1 s vs 195.2 s false)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        # preferSortMergeJoin stays TRUE (Spark's default) after a
-        # full 227-entry A/B (r14): globally allowing planner-picked
-        # shuffled-hash joins read 195.2 s vs 180.1 s sequential
-        # (worst: parts_pagerank_iterated +0.8 s, dedup_clusters
-        # family +0.3-0.5 s — hash builds on the few-but-wide
-        # post-aggregate relations lose to the pipelined sorts), plus
-        # one StackOverflowError in a streaming thread. The operators
-        # that PROFIT from SHJ (the shingle self-joins) already hint
-        # SHUFFLE_HASH at the call site — per-join choice beats a
-        # session-global flip. Env knob kept for byte-bound ETL
-        # deployments.
-        .config(
-            "spark.sql.join.preferSortMergeJoin",
-            os.environ.get("SPARK_PREFER_SMJ", "true"),
-        )
         # dims up to 64 MiB broadcast instead of shuffling the fact side
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # Arrow for the pandas_udf / mapInPandas operators
@@ -128,28 +115,8 @@ def get_spark(
         )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.optimizer.excludedRules", EXCLUDED_OPTIMIZER_RULES)
-        # Job scheduling: FIFO by default, MEASURED not assumed — the
-        # r7 four-cell A/B (SCHED_AB.md; identical snapshot, median-of-3)
-        # read FIFO 156.0 s sequential / 30.0 s concurrent-8 vs
-        # properly-wired FAIR (allocation file declaring the default
-        # pool FAIR + one scheduler pool per submitter thread) at
-        # 162.5 s / 70.7 s. FAIR round-robins task slots across all
-        # concurrent jobs, which trades MAKESPAN for per-job latency
-        # fairness — the right call for interactive multi-tenant
-        # serving, the wrong default for throughput. Opt in with
-        # SPARK_GRAFT_SCHEDULER=FAIR (the allocation file below then
-        # makes same-pool jobs genuinely share, unlike the bare
-        # scheduler.mode=FAIR no-op r5/r6 flagged).
-        .config("spark.scheduler.mode", scheduler)
+        # FIFO beat per-thread-pool FAIR on both cells (SCHED_AB.md):
+        # 156.0 s sequential / 30.0 s concurrent-8 vs 162.5 s / 70.7 s.
+        .config("spark.scheduler.mode", "FIFO")
+        .getOrCreate()
     )
-    if scheduler == "FAIR":
-        # the mode alone is not enough: with no allocation file the
-        # implicit default pool schedules its OWN jobs FIFO. Ship a
-        # declared default pool with FAIR internal mode so same-pool
-        # concurrent jobs actually share task slots.
-        builder = builder.config(
-            "spark.scheduler.allocation.file",
-            os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                         "fairscheduler.xml"),
-        )
-    return builder.getOrCreate()

@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from uber_data_pipeline_spark.session import tune_runtime
 from uber_data_pipeline_spark.sources.readers import SCHEMAS, normalize_events
 
 
@@ -84,6 +85,6 @@ def scd2_history(
 def read_stream_events(spark: SparkSession, path: str) -> DataFrame:
     """File-source change feed for the events table (new parquet files
     matching ``path`` == new changes)."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    tune_runtime(spark)
     raw = spark.readStream.schema(SCHEMAS["events"]).parquet(path)
     return normalize_events(raw)

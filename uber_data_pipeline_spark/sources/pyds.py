@@ -38,6 +38,8 @@ from pyspark.sql.datasource import (
     SimpleDataSourceStreamReader,
 )
 
+from uber_data_pipeline_spark.session import tune_runtime
+
 FORMAT_NAME = "snapshot_manifest"
 
 _OPS = {
@@ -114,13 +116,9 @@ class SnapshotManifestSource(DataSource):
 
 
 def register(spark) -> None:
-    # pushFilters is rejected outright unless the runtime flag is on.
-    # Set DELIBERATELY without restore: the returned DataFrame is
-    # lazy, so the flag must still be on when the caller's ACTION
-    # runs — a set/restore window here would break every read.
-    # Harnesses that care about conf hygiene snapshot+restore it
-    # around their run (bench.py does).
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
+    # pushFilters is rejected unless tune_runtime's filterPushdown flag
+    # is on when the lazy read's action runs
+    tune_runtime(spark)
     spark.dataSource.register(SnapshotManifestSource)
 
 

@@ -18,6 +18,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from uber_data_pipeline_spark.session import tune_runtime
+
 # Pinned source schemas as DDL strings (the "declared catalog") —
 # kept as strings so importing this module needs no live session;
 # DataFrameReader.schema() accepts DDL directly. events.ts has shipped
@@ -88,7 +90,7 @@ def read_parquet(
         # no pinned schema here: the footer decides nanos-vs-micros and
         # normalize_events() reconciles — a pin would break on one of
         # the two encodings the generator has shipped.
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        tune_runtime(spark)
         return normalize_events(reader.parquet(path))
     if table in SCHEMAS:
         reader = reader.schema(SCHEMAS[table])

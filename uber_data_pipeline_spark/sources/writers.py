@@ -27,23 +27,15 @@ def write_partitioned(
     path: str,
     partition_cols: list[str],
     mode: str = "overwrite",
-    dynamic: bool = True,
 ) -> None:
-    """Partitioned parquet write; with ``dynamic`` only the partitions
-    present in ``df`` are replaced (idempotent incremental loads)."""
-    spark = df.sparkSession
-    mode_key = "spark.sql.sources.partitionOverwriteMode"
-    prev_mode = spark.conf.get(mode_key, None)
-    if dynamic:
-        spark.conf.set(mode_key, "dynamic")
-    try:
-        df.write.mode(mode).partitionBy(*partition_cols).parquet(path)
-    finally:
-        if dynamic:
-            if prev_mode is None:
-                spark.conf.unset(mode_key)
-            else:
-                spark.conf.set(mode_key, prev_mode)
+    """Partitioned parquet write; an overwrite replaces only the
+    partitions present in ``df`` (idempotent incremental loads)."""
+    (
+        df.write.mode(mode)
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(*partition_cols)
+        .parquet(path)
+    )
 
 
 def write_bucketed(
@@ -126,9 +118,12 @@ def merge_upsert_partitioned(
     object stores without atomic rename (S3) each "rename" is the
     store's copy+delete — a table format is the real fix there."""
     changed = [r[0] for r in changes.select(part_col).distinct().collect()]
-    stored = spark.read.parquet(target_path).filter(
-        F.col(part_col).isin(changed)
-    )
+    touched = F.col(part_col).isin(changed)
+    if None in changed:
+        # isin never matches NULL: without this arm the default
+        # partition would be replaced by the change rows alone
+        touched = touched | F.col(part_col).isNull()
+    stored = spark.read.parquet(target_path).filter(touched)
     surviving = stored.join(
         changes.select(*key_cols), key_cols, "left_anti"
     )

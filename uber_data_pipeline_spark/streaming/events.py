@@ -17,7 +17,6 @@ from __future__ import annotations
 import itertools
 import os
 import shutil
-import threading
 from collections.abc import Iterator
 from typing import Any
 
@@ -27,21 +26,18 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from uber_data_pipeline_spark.functions.numeric import dsum
+from uber_data_pipeline_spark.session import scoped_session
 from uber_data_pipeline_spark.sources.cdc import read_stream_events
 
 SESSION_GAP_SECONDS = 1800
 _sink_ids = itertools.count()
 
-# Streaming runners pin session confs (shuffle.partitions = state
-# partitions; the late-data audit also flips statefulOperator.
-# allowMultiple) around .start()/.awaitTermination() and restore them
-# after. bench.py's concurrent pass plans many queries on ONE shared
-# session, so the set -> run -> restore windows of two streaming
-# queries must not interleave — this lock serializes them. Batch
-# queries planned inside a window still see the pinned
-# shuffle.partitions (harmless: AQE re-sizes), but never a
-# semantics-changing streaming conf mid-flip.
-_STREAM_CONF_LOCK = threading.Lock()
+# Every stateful stream is built on its own scoped_session child: the
+# state-partition width (and, per runner, the state-store provider or
+# statefulOperator.allowMultiple) is set on that child only, so
+# queries planned concurrently on the caller's session never see it.
+# A memory sink's view lives in the child; runners return it through
+# the child's catalog.
 
 _ARTIFACTS = os.path.join(
     os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
@@ -83,7 +79,13 @@ def events_landing_dir(sf_dir: str) -> str:
     return dst_dir
 
 
-STATE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_STATE_PARTITIONS", "8"))
+# shuffle.partitions at a stateful query's start becomes its STATE
+# STORE partition count, and every state partition pays a store
+# open/commit plus a Python worker round per batch — on a single node
+# 32 partitions cost ~3x over 8 for the same data. On a cluster, size
+# it to executors x cores (it is fixed for the checkpoint's lifetime).
+STATE_PARTITIONS = 8
+_STATE_CONF = {"spark.sql.shuffle.partitions": str(STATE_PARTITIONS)}
 
 # HDFS-backed (heap) state store is the default; RocksDB is the
 # large-state path — state lives off-heap/on-disk per partition, so
@@ -96,46 +98,19 @@ ROCKSDB_PROVIDER = (
 )
 
 
-def _run_to_memory(
-    stream_df: DataFrame,
-    output_mode: str,
-    state_partitions: int = STATE_PARTITIONS,
-    state_store_provider: str | None = None,
-) -> DataFrame:
+def _run_to_memory(stream_df: DataFrame, output_mode: str) -> DataFrame:
     """Run an AvailableNow streaming query into a memory sink and
-    return the sink as a DataFrame.
-
-    shuffle.partitions is pinned around .start(): it becomes the
-    STATE STORE partition count, and every state partition pays a
-    store open/commit plus a Python worker round per batch — on a
-    single node 32 partitions cost ~3x over 8 for the same data. On
-    a cluster, size it to executors x cores (it is fixed for the
-    checkpoint's lifetime)."""
+    return the sink as a DataFrame of the stream's own session."""
     spark = stream_df.sparkSession
     name = f"udp_stream_sink_{next(_sink_ids)}"
-    with _STREAM_CONF_LOCK:
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        provider_key = "spark.sql.streaming.stateStore.providerClass"
-        prev_provider = spark.conf.get(provider_key, None)
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-        if state_store_provider is not None:
-            spark.conf.set(provider_key, state_store_provider)
-        try:
-            q = (
-                stream_df.writeStream.format("memory")
-                .queryName(name)
-                .outputMode(output_mode)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-            if state_store_provider is not None:
-                if prev_provider is None:
-                    spark.conf.unset(provider_key)
-                else:
-                    spark.conf.set(provider_key, prev_provider)
+    (
+        stream_df.writeStream.format("memory")
+        .queryName(name)
+        .outputMode(output_mode)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
     return spark.table(name)
 
 
@@ -149,7 +124,9 @@ def windowed_agg_stream(
 
     sum_value goes through decimal (sum order in a shuffled stream is
     nondeterministic; decimal addition is associative-exact)."""
-    ev = read_stream_events(spark, events_landing_dir(sf_dir))
+    ev = read_stream_events(
+        scoped_session(spark, _STATE_CONF), events_landing_dir(sf_dir)
+    )
     agg = (
         ev.withWatermark("ts", watermark)
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
@@ -247,7 +224,9 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the join shuffles both streams on user_id (state
     co-partitioned), state size ~= arrival-rate x (watermark + range
     window) per side — independent of total stream length."""
-    ev = read_stream_events(spark, events_landing_dir(sf_dir))
+    ev = read_stream_events(
+        scoped_session(spark, _STATE_CONF), events_landing_dir(sf_dir)
+    )
     views = (
         ev.filter(F.col("event_type") == "view")
         .selectExpr("user_id AS v_user", "event_id AS view_id", "ts AS vts")
@@ -307,7 +286,9 @@ def dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     state-store partitions; the watermark evicts fingerprints once no
     older-than-horizon arrival is possible, so state size is bounded
     by (arrival rate x watermark) regardless of total stream length."""
-    ev = read_stream_events(spark, events_landing_dir(sf_dir))
+    ev = read_stream_events(
+        scoped_session(spark, _STATE_CONF), events_landing_dir(sf_dir)
+    )
     redelivered = ev.filter(F.col("event_id") % 10 == 0)
     feed = ev.unionByName(redelivered)
     deduped = (
@@ -333,7 +314,12 @@ def sessionization_stream(
     runner must terminate when the feed drains — an always-on deploy
     would set ProcessingTimeTimeout ~= the gap to evict idle users'
     state (and emit their final session) instead."""
-    ev = read_stream_events(spark, events_landing_dir(sf_dir)).select("user_id", "ts")
+    conf = dict(_STATE_CONF)
+    if state_store_provider is not None:
+        conf["spark.sql.streaming.stateStore.providerClass"] = state_store_provider
+    ev = read_stream_events(
+        scoped_session(spark, conf), events_landing_dir(sf_dir)
+    ).select("user_id", "ts")
     sessions = ev.groupBy("user_id").applyInPandasWithState(
         _session_kernel,
         outputStructType=_SESSION_OUT_SCHEMA,
@@ -341,9 +327,7 @@ def sessionization_stream(
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    return _run_to_memory(
-        sessions, "update", state_store_provider=state_store_provider
-    )
+    return _run_to_memory(sessions, "update")
 
 
 def merge_sink_stream(
@@ -598,7 +582,9 @@ def hll_distinct_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from uber_data_pipeline_spark.catalog import load_table
 
-    ev = read_stream_events(spark, events_landing_dir(sf_dir))
+    ev = read_stream_events(
+        scoped_session(spark, _STATE_CONF), events_landing_dir(sf_dir)
+    )
     registers = (
         ev.selectExpr(
             "event_type",
@@ -649,8 +635,8 @@ def late_data_audit_stream(
     silently re-creates the group (numRowsDroppedByWatermark stays 0)
     so chained operators can consume intermediate results. For a
     single-aggregation query that wants the classic strict-drop
-    contract, the flag must be false; it is pinned (and restored)
-    around this query.
+    contract, the flag must be false; it is set on this query's own
+    scoped session.
 
     Sink pattern: update mode emits changed keys per batch; each
     batch APPENDS its rows stamped with the batch id, and the final
@@ -685,8 +671,16 @@ def late_data_audit_stream(
         # file source orders batches by modification time: pin it
         os.utime(dst, (1_700_000_000 + i * 100, 1_700_000_000 + i * 100))
 
+    # strict late-row drop (see docstring): single stateful op here
+    stream_spark = scoped_session(
+        spark,
+        {
+            **_STATE_CONF,
+            "spark.sql.streaming.statefulOperator.allowMultiple": "false",
+        },
+    )
     changes = (
-        spark.readStream.schema(
+        stream_spark.readStream.schema(
             "event_id bigint, ts timestamp, event_type string, value double"
         )
         .option("maxFilesPerTrigger", "1")
@@ -714,25 +708,14 @@ def late_data_audit_stream(
             "append"
         ).parquet(log_dir)
 
-    with _STREAM_CONF_LOCK:
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        allow_key = "spark.sql.streaming.statefulOperator.allowMultiple"
-        prev_allow = spark.conf.get(allow_key, "true")
-        spark.conf.set("spark.sql.shuffle.partitions", str(STATE_PARTITIONS))
-        # strict late-row drop (see docstring): single stateful op here
-        spark.conf.set(allow_key, "false")
-        try:
-            q = (
-                agg.writeStream.foreachBatch(apply_batch)
-                .outputMode("update")
-                .option("checkpointLocation", os.path.join(root, "checkpoint"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-            spark.conf.set(allow_key, prev_allow)
+    (
+        agg.writeStream.foreachBatch(apply_batch)
+        .outputMode("update")
+        .option("checkpointLocation", os.path.join(root, "checkpoint"))
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
 
     from pyspark.sql import Window
 
@@ -765,26 +748,22 @@ def state_store_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         _ARTIFACTS, "state_read", os.path.basename(sf_dir.rstrip("/"))
     )
     shutil.rmtree(root, ignore_errors=True)
-    ev = read_stream_events(spark, events_landing_dir(sf_dir))
+    ev = read_stream_events(
+        scoped_session(spark, _STATE_CONF), events_landing_dir(sf_dir)
+    )
     agg = (
         ev.withWatermark("ts", "1 hour")
         .groupBy(F.window("ts", "1 day").alias("w"), "event_type")
         .agg(F.count("*").alias("n_events"))
     )
-    with _STREAM_CONF_LOCK:
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(STATE_PARTITIONS))
-        try:
-            q = (
-                agg.writeStream.format("noop")
-                .outputMode("update")
-                .option("checkpointLocation", os.path.join(root, "checkpoint"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
+    (
+        agg.writeStream.format("noop")
+        .outputMode("update")
+        .option("checkpointLocation", os.path.join(root, "checkpoint"))
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
     return (
         spark.read.format("statestore")
         .load(os.path.join(root, "checkpoint"))
@@ -844,7 +823,9 @@ def sessionization_stream_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
     _SessionProcessorCls = type(
         "_SessionProcessorTws", (_SessionProcessor, StatefulProcessor), {}
     )
-    ev = read_stream_events(spark, events_landing_dir(sf_dir)).select(
+    ev = read_stream_events(
+        scoped_session(spark, _STATE_CONF), events_landing_dir(sf_dir)
+    ).select(
         "user_id", "ts"
     )
     sessions = ev.groupBy("user_id").transformWithStateInPandas(
