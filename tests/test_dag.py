@@ -62,6 +62,28 @@ def test_dag_models_match_reference_queries(spark):
         assert not problems, f"{model_name}: " + "; ".join(problems)
 
 
+def test_run_dag_loads_only_its_deps(spark, tmp_path):
+    """run_dag reads only the source tables its models name in deps:
+    a directory holding just orders, customer, nation and region
+    builds the same 8 outputs as the full table directory."""
+    sources = tmp_path / "sources"
+    sources.mkdir()
+    for t in ("orders", "customer", "nation", "region"):
+        os.symlink(os.path.join(SF_DIR, f"{t}.parquet"), sources / f"{t}.parquet")
+    only_deps = run_dag(spark, build_registry(), str(sources), str(tmp_path / "a"))
+    full = run_dag(spark, build_registry(), SF_DIR, str(tmp_path / "b"))
+    assert [r.model for r in only_deps] == [r.model for r in full]
+    assert len(full) == 8
+    for a, b in zip(only_deps, full):
+        assert a.n_rows == b.n_rows, a.model
+        problems = compare(
+            a.model,
+            spark.read.parquet(a.path).toPandas(),
+            spark.read.parquet(b.path).toPandas(),
+        )
+        assert not problems, f"{a.model}: " + "; ".join(problems)
+
+
 def test_cron_next_fire_semantics():
     """5-field cron evaluator: strictly-after boundary, steps, ranges,
     Vixie dom-OR-dow, leap-day termination."""

@@ -213,6 +213,94 @@ def test_streaming_merge_resumes_from_checkpoint(spark):
     assert n_partial <= len(want)
 
 
+def test_streaming_merge_one_batch_per_run(spark, tmp_path):
+    """An availableNow run merges every landed file in ONE micro-batch
+    (one offsets entry, one merge), and the table still equals the
+    one-shot relational merge."""
+    import shutil
+
+    from uber_data_pipeline_spark.queries.pipeline import (
+        MERGE_SINK_PARTS,
+        _cdc_frames,
+    )
+    from uber_data_pipeline_spark.streaming.events import merge_sink_stream
+
+    base, delta = _cdc_frames(spark, SF_DIR)
+    stage, landing = str(tmp_path / "stage"), str(tmp_path / "landing")
+    delta.repartition(4).write.parquet(stage)
+    os.makedirs(landing)
+    parts = [f for f in os.listdir(stage) if f.startswith("part-")]
+    assert len(parts) == 4
+    for f in parts:
+        shutil.copy(os.path.join(stage, f), os.path.join(landing, f))
+
+    checkpoint = str(tmp_path / "checkpoint")
+    final = merge_sink_stream(
+        spark,
+        base,
+        landing,
+        "o_orderkey bigint, o_orderstatus string, o_totalprice double, version int",
+        target_path=str(tmp_path / "target"),
+        checkpoint_dir=checkpoint,
+        key_cols=["o_orderkey"],
+        part_expr=f"CAST(o_orderkey % {MERGE_SINK_PARTS} AS INT)",
+    )
+
+    batches = [f for f in os.listdir(os.path.join(checkpoint, "offsets")) if f.isdigit()]
+    assert batches == ["0"]
+    cols = ["o_orderkey", "o_orderstatus", "o_totalprice", "version"]
+    want = merge_latest(base, delta, ["o_orderkey"], "version")
+    assert sorted(final.select(*cols).collect()) == sorted(want.select(*cols).collect())
+
+
+def _land(path: str, rows: list[tuple], mtime: int) -> None:
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    k, v = zip(*rows)
+    pq.write_table(
+        pa.table({"k": pa.array(k, pa.int64()), "v": pa.array(v, pa.string())}), path
+    )
+    os.utime(path, (mtime, mtime))
+
+
+def test_streaming_merge_newest_file_wins(spark, tmp_path):
+    """Two files of one micro-batch carry the same key: the row of the
+    newer file wins, newest = max (modification time, path) — the
+    order one-file batches were applied in. The lexically first file
+    is the newer one here, so neither path order nor listing order
+    can pass for mtime order; with equal mtimes the path decides."""
+    from uber_data_pipeline_spark.streaming.events import merge_sink_stream
+
+    base = spark.createDataFrame([(1, "base"), (2, "base")], "k bigint, v string")
+
+    def run(name: str, mtime_a: int, mtime_b: int) -> dict:
+        root = tmp_path / name
+        landing = str(root / "landing")
+        os.makedirs(landing)
+        _land(os.path.join(landing, "a.parquet"), [(1, "from_a"), (3, "from_a")], mtime_a)
+        _land(os.path.join(landing, "b.parquet"), [(1, "from_b"), (2, "from_b")], mtime_b)
+        got = merge_sink_stream(
+            spark,
+            base,
+            landing,
+            "k bigint, v string",
+            target_path=str(root / "target"),
+            checkpoint_dir=str(root / "checkpoint"),
+            key_cols=["k"],
+            part_expr="CAST(k % 2 AS INT)",
+        ).collect()
+        assert len(got) == 3, got  # one row per key
+        return {r.k: r.v for r in got}
+
+    assert run("a_newer", 1_700_000_100, 1_700_000_000) == {
+        1: "from_a", 2: "from_b", 3: "from_a",
+    }
+    assert run("same_mtime", 1_700_000_000, 1_700_000_000) == {
+        1: "from_b", 2: "from_b", 3: "from_a",
+    }
+
+
 def test_latest_version_default_on_empty_lake(tmp_path):
     """A stream started before any commit exists must see 'no new
     data' (version -1), not crash; the strict batch path still

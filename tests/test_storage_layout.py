@@ -154,3 +154,39 @@ def test_merge_upsert_keeps_null_partition_rows(spark):
         (4, None, "new"),
     }
     shutil.rmtree(path, ignore_errors=True)
+
+
+def test_merge_sweeps_swap_aside_left_by_a_crash(spark):
+    """A crash between the move-aside and the swap-in leaves the
+    partition's only copy in ``<target>__swap_aside/``; the next merge
+    must put it back before reading the table. An aside whose live
+    partition exists (a crash after the swap-in) is stale and goes."""
+    from uber_data_pipeline_spark.sources.writers import merge_upsert_partitioned
+
+    path = os.path.join(ART, "merge_swap_crash")
+    aside = path + "__swap_aside"
+    for p in (path, aside):
+        shutil.rmtree(p, ignore_errors=True)
+    base = spark.range(100).selectExpr(
+        "id AS k", "CAST(id % 4 AS INT) AS part", "'old' AS val"
+    )
+    base.repartition(1).write.partitionBy("part").parquet(path)
+    # the on-disk state of a crash mid-swap of part=1, plus a stale
+    # aside of part=2 from a crash right after its swap-in
+    os.makedirs(aside)
+    os.rename(os.path.join(path, "part=1"), os.path.join(aside, "part=1"))
+    shutil.copytree(os.path.join(path, "part=2"), os.path.join(aside, "part=2"))
+
+    changes = spark.createDataFrame(
+        [(1, 1, "new"), (103, 3, "new")], "k long, part int, val string"
+    )
+    merge_upsert_partitioned(spark, path, changes, ["k"], "part")
+
+    rows = spark.read.parquet(path).collect()
+    keys = sorted(r.k for r in rows)
+    assert keys == list(range(100)) + [103]  # every row exactly once
+    assert {r.k: r.val for r in rows if r.val == "new"} == {1: "new", 103: "new"}
+    assert all(not str(r.part).endswith("__swap_aside") for r in rows)
+    assert not any(d.endswith("__swap_aside") for d in os.listdir(path))
+    assert not os.path.exists(aside)
+    shutil.rmtree(path, ignore_errors=True)

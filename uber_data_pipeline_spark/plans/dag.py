@@ -16,8 +16,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
-from uber_data_pipeline_spark.catalog import load_tables
-from uber_data_pipeline_spark.plans.model import ModelRegistry
+from uber_data_pipeline_spark.catalog import load_table
+from uber_data_pipeline_spark.plans.model import Model, ModelRegistry
 
 
 @dataclass(frozen=True)
@@ -26,6 +26,16 @@ class BuildResult:
     n_rows: int
     seconds: float
     path: str
+
+
+def _register_sources(
+    spark: SparkSession, registry: ModelRegistry, models: list[Model], sf_dir: str
+) -> None:
+    """Register a temp view for each source table the given models
+    name in their deps (deps that are not models are source tables)."""
+    sources = {d for m in models for d in m.deps if d not in registry.models}
+    for name in sorted(sources):
+        load_table(spark, sf_dir, name).createOrReplaceTempView(name)
 
 
 def run_dag(
@@ -42,10 +52,18 @@ def run_dag(
     dbt/Dagster thread-pool execution model; Spark's FIFO scheduler
     interleaves the sibling jobs across the executor pool).
     ``materialize=False`` builds views only (a dry run /
-    `dbt compile`)."""
+    `dbt compile`).
+
+    Only the source tables the selected models name in their ``deps``
+    are loaded and registered as views (a dbt run resolves just the
+    ``source()`` relations its models reference), so ``sf_dir`` needs
+    to hold only those tables. A materialized model is read back with
+    the schema of the frame that wrote it, so neither step runs a
+    schema-inference job for a schema the engine already knows."""
     from concurrent.futures import ThreadPoolExecutor
 
-    load_tables(spark, sf_dir, register_views=True)
+    levels = registry.topo_levels(select)
+    _register_sources(spark, registry, [m for level in levels for m in level], sf_dir)
 
     def build_one(model) -> BuildResult:
         t0 = time.perf_counter()
@@ -53,7 +71,7 @@ def run_dag(
         path = os.path.join(out_dir, model.name)
         if materialize:
             df.write.mode("overwrite").parquet(path)
-            df = spark.read.parquet(path)
+            df = spark.read.schema(df.schema).parquet(path)
         df.createOrReplaceTempView(model.name)
         return BuildResult(
             model=model.name,
@@ -63,7 +81,7 @@ def run_dag(
         )
 
     results: list[BuildResult] = []
-    for level in registry.topo_levels(select):
+    for level in levels:
         if len(level) == 1:
             results.append(build_one(level[0]))
             continue
@@ -100,14 +118,12 @@ def refresh_incremental(
     Returns the merged table (also written to ``out_dir/<name>``)."""
     import pyspark.sql.functions as F
 
-    from uber_data_pipeline_spark.catalog import load_tables
-
     model = registry.models[name]
     spec = model.incremental
     assert spec is not None, f"model {name} is not incremental"
     base_filter = f"{spec.event_col} < TIMESTAMP '{cutoff}'"
     delta_filter = f"{spec.event_col} >= TIMESTAMP '{cutoff}'"
-    load_tables(spark, sf_dir, register_views=True)
+    _register_sources(spark, registry, [model], sf_dir)
 
     stored_path = os.path.join(out_dir, name)
     # 1) the previous scheduled run: full build of the base window

@@ -699,10 +699,10 @@ def cdc_merge_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def streaming_merge_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The CDC delta applied as a STREAM: the delta batch is staged as
-    4 landing files, consumed one micro-batch per file
-    (maxFilesPerTrigger=1), each batch MERGEd into the partitioned
-    parquet target via foreachBatch (streaming.events.merge_sink_stream)
-    — the always-on Airbyte-sync analog. The final table must equal the
+    4 landing files, consumed by one availableNow micro-batch (newest
+    file wins per key) and MERGEd into the partitioned parquet target
+    via foreachBatch (streaming.events.merge_sink_stream) — the
+    always-on Airbyte-sync analog. The final table must equal the
     one-shot relational merge, so this shares `cdc_incremental_merge`'s
     oracle."""
     base, delta = _cdc_frames(spark, sf_dir)

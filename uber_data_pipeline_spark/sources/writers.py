@@ -116,14 +116,38 @@ def merge_upsert_partitioned(
     missing partition is between two metadata renames, not a
     recursive delete. Not transactional across partitions, and on
     object stores without atomic rename (S3) each "rename" is the
-    store's copy+delete — a table format is the real fix there."""
+    store's copy+delete — a table format is the real fix there.
+
+    Crash safety: the live partition is moved aside into the sibling
+    dir ``<target>__swap_aside/`` (outside the table, like the
+    ``__merge_stage`` dir, so a reader never parses it as a partition
+    value). A crash between the two renames leaves the aside as the
+    partition's only copy; every merge first sweeps that dir, renaming
+    an aside back when its live partition is missing and deleting it
+    otherwise.
+
+    ``changes`` carries the table's full schema (a pure upsert), so
+    the stored partitions are read with it instead of re-inferring
+    the schema from the lake's footers."""
+    jvm = spark._jvm
+    hpath = jvm.org.apache.hadoop.fs.Path
+    fs = hpath(target_path).getFileSystem(
+        spark._jsc.hadoopConfiguration()
+    )
+    aside_root = hpath(target_path.rstrip("/") + "__swap_aside")
+    if fs.exists(aside_root):
+        for st in fs.listStatus(aside_root):
+            live = hpath(os.path.join(target_path, st.getPath().getName()))
+            if not fs.exists(live) and not fs.rename(st.getPath(), live):
+                raise IOError(f"merge sweep: could not restore {live}")
+        fs.delete(aside_root, True)
     changed = [r[0] for r in changes.select(part_col).distinct().collect()]
     touched = F.col(part_col).isin(changed)
     if None in changed:
         # isin never matches NULL: without this arm the default
         # partition would be replaced by the change rows alone
         touched = touched | F.col(part_col).isNull()
-    stored = spark.read.parquet(target_path).filter(touched)
+    stored = spark.read.schema(changes.schema).parquet(target_path).filter(touched)
     surviving = stored.join(
         changes.select(*key_cols), key_cols, "left_anti"
     )
@@ -134,13 +158,9 @@ def merge_upsert_partitioned(
     # streamed-into lakes)
     merged = surviving.unionByName(changes).repartition(F.col(part_col))
     stage = target_path.rstrip("/") + "__merge_stage"
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path
-    fs = hpath(target_path).getFileSystem(
-        spark._jsc.hadoopConfiguration()
-    )
     fs.delete(hpath(stage), True)
     merged.write.mode("overwrite").partitionBy(part_col).parquet(stage)
+    fs.mkdirs(aside_root)
     # every changed partition has >= 1 staged row (changes keep their
     # partition under a pure upsert), so listing the stage dir visits
     # exactly the churned partitions — with Spark's own dir names
@@ -149,14 +169,14 @@ def merge_upsert_partitioned(
         if not name.startswith(f"{part_col}="):
             continue  # _SUCCESS and friends
         dst = hpath(os.path.join(target_path, name))
-        aside = hpath(os.path.join(target_path, name + "__swap_aside"))
-        fs.delete(aside, True)
+        aside = hpath(aside_root, name)
         # Hadoop rename() reports failure as False, not an exception
         if fs.exists(dst) and not fs.rename(dst, aside):
             raise IOError(f"merge swap: could not move aside {name}")
         if not fs.rename(st.getPath(), dst):
             raise IOError(f"merge swap: could not swap in {name}")
         fs.delete(aside, True)
+    fs.delete(aside_root, True)
     fs.delete(hpath(stage), True)
 
 

@@ -344,9 +344,18 @@ def merge_sink_stream(
     """Streaming MERGE: a file stream of change rows is upserted into
     a partitioned parquet target per micro-batch via foreachBatch +
     merge_upsert_partitioned — the always-on form of the CDC load
-    (Airbyte sync cadence -> continuous). `maxFilesPerTrigger=1`
-    forces one micro-batch per landed file, so the merge really runs
-    incrementally, not as one big batch.
+    (Airbyte sync cadence -> continuous).
+
+    Batching: an availableNow run consumes every file landed since the
+    last run in ONE micro-batch, so a landed day costs one merge (one
+    read and one rewrite of each touched partition), not one per file.
+    Within the batch, each key keeps only the rows of the NEWEST file
+    that carries it, newest = max (file modification time, file path):
+    the order the file source would have applied one-file batches in
+    (it sorts new files by mtime; see late_data_audit_stream), so the
+    last file to touch a key wins exactly as it did when every file
+    was merged on its own. ``key_cols`` are the table's primary key
+    (non-NULL). The helper columns never reach the merge.
 
     Exactly-once: the checkpoint records which source files each batch
     consumed; foreachBatch re-runs a failed batch, and the partition
@@ -355,8 +364,11 @@ def merge_sink_stream(
     an idempotent lake sink without a table format.
 
     Scale shape: per batch, cost is bounded by the touched partitions
-    (see merge_upsert_partitioned); state is only the file-source log.
-    Returns the final merged table."""
+    (see merge_upsert_partitioned) plus one shuffle of the change rows
+    by key; state is only the file-source log. Returns the final
+    merged table."""
+    from pyspark.sql import Window
+
     from uber_data_pipeline_spark.sources.writers import merge_upsert_partitioned
 
     # cluster on the partition column: one staged file per partition
@@ -369,17 +381,25 @@ def merge_sink_stream(
             F.col(part_col)
         ).write.partitionBy(part_col).mode("overwrite").parquet(target_path)
 
-    changes = (
-        spark.readStream.schema(delta_schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(delta_dir)
+    changes = spark.readStream.schema(delta_schema).parquet(delta_dir).select(
+        "*",
+        F.struct(
+            F.col("_metadata.file_modification_time"),
+            F.col("_metadata.file_path"),
+        ).alias("_src_file"),
     )
+    by_key = Window.partitionBy(*key_cols)
 
     def apply_batch(bdf: DataFrame, batch_id: int) -> None:
+        newest = (
+            bdf.withColumn("_newest_file", F.max("_src_file").over(by_key))
+            .filter(F.col("_src_file") == F.col("_newest_file"))
+            .drop("_src_file", "_newest_file")
+        )
         merge_upsert_partitioned(
             bdf.sparkSession,
             target_path,
-            bdf.withColumn(part_col, F.expr(part_expr)),
+            newest.withColumn(part_col, F.expr(part_expr)),
             key_cols,
             part_col,
         )
