@@ -84,6 +84,69 @@ def test_run_dag_loads_only_its_deps(spark, tmp_path):
         assert not problems, f"{a.model}: " + "; ".join(problems)
 
 
+def test_run_dag_counts_rows_from_the_written_footers(spark, tmp_path, monkeypatch):
+    """A materializing run_dag never calls DataFrame.count: n_rows is
+    the footers' num_rows sum, equal to a fresh count of what was
+    written, for the 8 uber models and for a model with no rows."""
+    registry = build_registry()
+    registry.sql_model("no_rows", deps=("orders",), sql="SELECT * FROM orders WHERE 1 = 0")
+
+    def no_count(self):
+        raise AssertionError("run_dag called DataFrame.count")
+
+    monkeypatch.setattr(type(spark.range(1)), "count", no_count)
+    built = run_dag(spark, registry, SF_DIR, str(tmp_path))
+    monkeypatch.undo()
+    assert len(built) == 9
+    for r in built:
+        assert r.n_rows == spark.read.parquet(r.path).count(), r.model
+    assert {r.model: r.n_rows for r in built}["no_rows"] == 0
+
+
+def test_elt_days_add_no_bus_listener(spark, tmp_path):
+    """Three elt days (merge_sink_stream, then run_dag over the lake)
+    on one session leave the SparkContext's listener bus with the
+    number of listeners it had after the first day: nothing on the
+    per-day path registers a listener (an Observation or a
+    QueryExecutionListener would, once per day)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from uber_data_pipeline_spark.streaming.events import merge_sink_stream
+
+    lake_sf, landing = tmp_path / "lake", tmp_path / "landing"
+    lake_sf.mkdir()
+    landing.mkdir()
+    for t in ("customer", "nation", "region"):
+        os.symlink(os.path.join(SF_DIR, f"{t}.parquet"), lake_sf / f"{t}.parquet")
+    orders = pq.read_table(os.path.join(SF_DIR, "orders.parquet"))
+    orders = orders.append_column("version", pa.array([0] * len(orders), pa.int32()))
+    base_path = str(tmp_path / "base.parquet")
+    pq.write_table(orders, base_path)
+    base = spark.read.parquet(base_path)
+    ddl = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in base.schema.fields)
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+
+    def day(d: int) -> int:
+        keys = orders.slice(d * 10, 10)
+        pq.write_table(
+            keys.set_column(keys.schema.get_field_index("version"), "version",
+                            pa.array([d] * len(keys), pa.int32())),
+            str(landing / f"day{d}.parquet"),
+        )
+        merge_sink_stream(
+            spark, base, str(landing), ddl, str(lake_sf / "orders.parquet"),
+            str(tmp_path / "checkpoint"), ["o_orderkey"],
+            "CAST(year(o_orderdate) AS INT)", part_col="o_year",
+        )
+        run_dag(spark, build_registry(), str(lake_sf), str(tmp_path / f"d{d}"))
+        bus.waitUntilEmpty(10_000)
+        return bus.listeners().size()
+
+    counts = [day(d) for d in (1, 2, 3)]
+    assert counts == [counts[0]] * 3, counts
+
+
 def test_cron_next_fire_semantics():
     """5-field cron evaluator: strictly-after boundary, steps, ranges,
     Vixie dom-OR-dow, leap-day termination."""

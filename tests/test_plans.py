@@ -415,3 +415,35 @@ def test_gopher_repetition_no_shuffle(spark):
     assert plan.count("Exchange") <= 1
     if "Exchange" in plan:
         assert "RoundRobinPartitioning" in plan
+
+
+def test_ivfpq_member_broadcast_gated_on_threshold(spark):
+    """ivfpq_topk hints the member side of its probe join only while
+    the n member rows (17 longs each) fit the session's broadcast
+    threshold. One byte short of that the hint is gone and stats
+    choose the join; with the threshold below n bytes nothing fits
+    and the probe join broadcasts neither side."""
+    import re
+
+    from uber_data_pipeline_spark.catalog import load_table
+    from uber_data_pipeline_spark.operators.similarity import IVFPQ_SUBSPACES, ivfpq_topk
+    from uber_data_pipeline_spark.session import scoped_session
+
+    n = load_table(spark, SF_DIR, "embeddings").count()
+    members_bytes = n * (1 + IVFPQ_SUBSPACES) * 8
+
+    def probe_join(threshold: int | None) -> tuple[str, str]:
+        session = spark if threshold is None else scoped_session(
+            spark, {"spark.sql.autoBroadcastJoinThreshold": threshold}
+        )
+        df = ivfpq_topk(load_table(session, SF_DIR, "embeddings"), 5)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        found = re.findall(r"(\w+Join) \[cell#\d+\], \[ncell#\d+\], Inner(?:, (Build\w+))?", plan)
+        assert len(found) == 1, plan[:3000]
+        return found[0]
+
+    members_broadcast = ("BroadcastHashJoin", "BuildRight")
+    assert probe_join(None) == members_broadcast
+    assert probe_join(members_bytes + 1) == members_broadcast
+    assert probe_join(members_bytes) != members_broadcast
+    assert probe_join(n - 1)[0] != "BroadcastHashJoin"

@@ -1997,10 +1997,18 @@ def ivfpq_topk(
     # catalyst stats), and the planner otherwise builds the PROBE side
     # — 128 doubles of ADC table per row vs the members' 17 longs, a
     # ~70 MB broadcast at sf1 (measured: pairs leg 12.8 -> 1.9 s with
-    # the hint). Beyond broadcast range this becomes a pair of
-    # cell-keyed shuffles, exactly like the old probes|><|assign form.
+    # the hint). The hint holds only while the n members (at most one
+    # row per vector) fit the session's broadcast threshold; beyond it
+    # stats and AQE choose, and the join becomes a pair of cell-keyed
+    # shuffles, exactly like the old probes|><|assign form.
+    members_bytes = n * (1 + IVFPQ_SUBSPACES) * 8
+    threshold = (
+        emb.sparkSession._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    )
+    if members_bytes < threshold:
+        members = F.broadcast(members)
     pairs = (
-        probes.join(F.broadcast(members), probes.cell == members.ncell)
+        probes.join(members, probes.cell == members.ncell)
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .selectExpr(
             "query_id",

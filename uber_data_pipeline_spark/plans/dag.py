@@ -38,6 +38,18 @@ def _register_sources(
         load_table(spark, sf_dir, name).createOrReplaceTempView(name)
 
 
+def _written_rows(path: str) -> int:
+    """Rows in the parquet files a write just left in ``path``: the sum
+    of ``num_rows`` over their footers (metadata only, no Spark job)."""
+    import pyarrow.parquet as pq
+
+    return sum(
+        pq.ParquetFile(os.path.join(path, f)).metadata.num_rows
+        for f in os.listdir(path)
+        if f.endswith(".parquet") and not f.startswith(("_", "."))
+    )
+
+
 def run_dag(
     spark: SparkSession,
     registry: ModelRegistry,
@@ -59,7 +71,12 @@ def run_dag(
     ``source()`` relations its models reference), so ``sf_dir`` needs
     to hold only those tables. A materialized model is read back with
     the schema of the frame that wrote it, so neither step runs a
-    schema-inference job for a schema the engine already knows."""
+    schema-inference job for a schema the engine already knows.
+
+    ``BuildResult.n_rows`` of a materialized model is the sum of
+    ``num_rows`` over the footers of the files its write produced, so
+    counting runs no Spark job; with ``materialize=False`` it is the
+    view's ``count()``."""
     from concurrent.futures import ThreadPoolExecutor
 
     levels = registry.topo_levels(select)
@@ -71,11 +88,14 @@ def run_dag(
         path = os.path.join(out_dir, model.name)
         if materialize:
             df.write.mode("overwrite").parquet(path)
+            n_rows = _written_rows(path)
             df = spark.read.schema(df.schema).parquet(path)
+        else:
+            n_rows = df.count()
         df.createOrReplaceTempView(model.name)
         return BuildResult(
             model=model.name,
-            n_rows=df.count(),
+            n_rows=n_rows,
             seconds=round(time.perf_counter() - t0, 3),
             path=path if materialize else "",
         )

@@ -366,7 +366,8 @@ def merge_sink_stream(
     Scale shape: per batch, cost is bounded by the touched partitions
     (see merge_upsert_partitioned) plus one shuffle of the change rows
     by key; state is only the file-source log. Returns the final
-    merged table."""
+    merged table, read with the schema it was written with (``base``
+    plus ``part_col``), so returning it runs no schema-inference job."""
     from pyspark.sql import Window
 
     from uber_data_pipeline_spark.sources.writers import merge_upsert_partitioned
@@ -411,7 +412,8 @@ def merge_sink_stream(
         .start()
     )
     q.awaitTermination()
-    return spark.read.parquet(target_path)
+    written = base.withColumn(part_col, F.expr(part_expr)).schema
+    return spark.read.schema(written).parquet(target_path)
 
 
 # --- rate-source merge sink -------------------------------------------
