@@ -18,28 +18,14 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from uber_data_pipeline_spark.harness import (  # noqa: E402
+    clear_all,
+    compile_warmup,
+    timed_noop_run,
+)
 from uber_data_pipeline_spark.session import get_spark, scoped_session  # noqa: E402
 
 import __spark_entry__ as entrymod  # noqa: E402
-
-
-def _clear_all(spark) -> None:
-    """Drop EVERYTHING a query materialized: clearCache() frees
-    InMemoryRelations but NOT localCheckpoint blocks, which otherwise
-    accumulate in the block manager across a 212-entry sweep until
-    Python's lazy GC gets around to them (r11: the accumulated
-    pressure inflated late heavy entries 3-13x at sf1). Explicitly
-    unpersist every persistent RDD between queries — queries are
-    independent, so nothing later can need an earlier one's blocks."""
-    spark.catalog.clearCache()
-    try:
-        jsc = spark.sparkContext._jsc.sc()
-        rdds = jsc.getPersistentRDDs()
-        it = rdds.values().iterator()
-        while it.hasNext():
-            it.next().unpersist(False)
-    except Exception:  # noqa: BLE001 — cleanup must never kill the bench
-        pass
 
 
 def _load_stamp() -> dict:
@@ -158,22 +144,9 @@ def main() -> int:
         q.awaitTermination()
 
     # compile warm-up pass: run EVERY registered query once at the
-    # smallest SF before timing. Whole-stage-codegen compiles per
-    # generated stage source (janino) on first execution — ~1-10 s for
-    # the widest plans — and the cache is keyed by source text, so the
-    # tiny-SF run compiles exactly the classes the timed run reuses.
-    # Without this the compile bill lands on whichever queries the
-    # rotation happens to put first (r2: 12 s of the front entry's
-    # 14 s was compile, measured 1.4 s warm).
-    warm_dir = os.path.join(os.path.dirname(sf_dir.rstrip("/")), "sf0.001")
-    if not os.path.isdir(warm_dir):
-        warm_dir = sf_dir
-    for name, fn in entrymod.queries().items():
-        try:
-            fn(spark, warm_dir).count()
-        except Exception:  # noqa: BLE001 — warm-up must never kill the bench
-            pass
-        _clear_all(spark)
+    # smallest SF before timing, so the janino compile bill does not
+    # land on whichever queries the rotation happens to put first
+    compile_warmup(spark, entrymod.queries().values(), sf_dir)
 
     # staging warm-up pass: several entries build a fingerprint-bound
     # per-SF artifact on first touch (snapshot lakes, LSH index, flat
@@ -213,7 +186,7 @@ def main() -> int:
             fn(spark, sf_dir).count()
         except Exception:  # noqa: BLE001 — warm-up must never kill the bench
             pass
-        _clear_all(spark)
+        clear_all(spark)
 
     # single-shot timings on this harness swing 2-5x run-to-run (r6
     # verdict measured a disjoint regression tail on byte-identical
@@ -256,23 +229,19 @@ def main() -> int:
     # driver-transfer or filesystem cost; scan-pruning entries keep
     # their pruned scans because the QUERY's own projection still
     # governs what is read.
-    from pyspark.sql import Observation
-    from pyspark.sql import functions as F  # noqa: F811
 
     # the rep/threshold/spread/min methodology lives in ONE place —
-    # uber_data_pipeline_spark.testing.timed_noop_run — shared with
+    # uber_data_pipeline_spark.harness.timed_noop_run — shared with
     # tools/rebench_entries.py and tools/scale_ladder.py so the
     # "exact bench methodology" contract those tools promise is
-    # structural, not copy-paste (r12 review item). _clear_all runs
+    # structural, not copy-paste (r12 review item). clear_all runs
     # between reps: operators cache intermediates (shingle sets,
     # edge lists) for their own multi-pass plans; drop them so no
     # query's timing rides on or pays for another query's leftovers.
-    from uber_data_pipeline_spark.testing import timed_noop_run
-
     load_before = _load_stamp()
     for name, fn in entrymod.queries().items():
         best, reps, rows = timed_noop_run(
-            spark, fn, sf_dir, _clear_all, REP_THRESHOLD_S
+            spark, fn, sf_dir, clear_all, REP_THRESHOLD_S
         )
         row_counts[name] = rows
         timings[name] = best
@@ -298,7 +267,7 @@ def main() -> int:
     try:
         from concurrent.futures import ThreadPoolExecutor
 
-        _clear_all(spark)
+        clear_all(spark)
 
         # pool-aware spread (r13, VERDICT r12 item 1): under 8 in-flight
         # queries, each spread site expanding to cores*2 partitions
@@ -386,13 +355,13 @@ def main() -> int:
             stride = max(1, len(names_sorted) // 10)
             offset = int(time.time() // 86400) % stride
             spot = names_sorted[offset::stride][:10]
-            _clear_all(spark)
+            clear_all(spark)
             ref_hashes: dict[str, str] = {}
             for s_name in spot:
                 ref_hashes[s_name] = _vhash(
                     entrymod.queries()[s_name](cspark, sf_dir).toPandas()
                 )
-                _clear_all(spark)
+                clear_all(spark)
 
             def _spot_one(s_name):
                 try:
@@ -408,7 +377,7 @@ def main() -> int:
         except Exception:  # noqa: BLE001 — the gate must not kill the bench
             pass
 
-        _clear_all(spark)
+        clear_all(spark)
     except Exception:  # noqa: BLE001
         pass
     # The driver captures stdout with a line-length bound (r1's full

@@ -8,6 +8,7 @@ import pytest
 
 import __spark_entry__ as entrymod
 from tests.conftest import SF_DIR
+from uber_data_pipeline_spark.harness import clear_all
 from uber_data_pipeline_spark.testing import compare
 
 QUERIES = entrymod.queries()
@@ -27,9 +28,10 @@ def test_oracle_keys_subset_of_queries():
 @pytest.mark.parametrize("name", sorted(QUERIES))
 def test_query_matches_oracle(name, spark, duck):
     sdf = QUERIES[name](spark, SF_DIR).toPandas()
-    # operators cache self-join intermediates; drop them so storage
-    # memory doesn't accumulate across the 100+ queries this session runs
-    spark.catalog.clearCache()
+    # operators cache self-join intermediates and localCheckpoint
+    # blocks; drop them so storage memory doesn't accumulate across
+    # the 200+ queries this session runs
+    clear_all(spark)
     if name not in ORACLES:
         assert len(sdf) >= 0  # rows-only check for non-SQL-expressible ops
         return

@@ -136,18 +136,8 @@ def test_scale_ladder_slope_fit():
     committed BENCH_ladder.json slopes are graded evidence — pin the
     math that produces them)."""
     import math
-    import os
-    import sys
 
-    # CWD-independent (ADVICE r9): resolve tools/ from this file
-    sys.path.insert(
-        0,
-        os.path.join(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-            "tools",
-        ),
-    )
-    from scale_ladder import _slope
+    from tools.scale_ladder import _slope
 
     pts_lin = [(s, 0.37 * s) for s in (1.0, 10.0, 20.0, 50.0)]
     assert abs(_slope(pts_lin) - 1.0) < 1e-9

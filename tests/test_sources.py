@@ -14,21 +14,9 @@ from uber_data_pipeline_spark.sources.cdc import (
     incremental_rows,
     merge_latest,
 )
-from uber_data_pipeline_spark.sources.readers import read_csv, read_parquet, quarantine_split
+from uber_data_pipeline_spark.sources.readers import read_csv, quarantine_split
 
 ART = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".artifacts")
-
-
-def test_read_parquet_pins_schema(spark):
-    df = read_parquet(spark, os.path.join(SF_DIR, "orders.parquet"), "orders")
-    assert df.schema["o_orderkey"].dataType.simpleString() == "bigint"
-    assert df.schema["o_orderdate"].dataType.simpleString() == "timestamp_ntz"
-
-
-def test_read_parquet_normalizes_event_nanos(spark):
-    df = read_parquet(spark, os.path.join(SF_DIR, "events.parquet"), "events")
-    assert df.schema["ts"].dataType.simpleString() == "timestamp"
-    assert df.count() > 0
 
 
 def _write(path, table) -> None:
@@ -72,7 +60,7 @@ def test_load_table_sees_an_added_partition_file(spark, tmp_path):
 def test_events_nanos_cold_and_warm_load_agree(spark, tmp_path):
     """TIMESTAMP(NANOS) events: the warm load reads with the cached
     schema (ts as the long nanosAsLong gives) and normalizes it to the
-    same micros as the cold load, through both entry points."""
+    same micros as the cold load."""
     import pyarrow as pa
 
     from uber_data_pipeline_spark.sources import readers
@@ -96,7 +84,6 @@ def test_events_nanos_cold_and_warm_load_agree(spark, tmp_path):
     cold = ts(load_table(spark, str(tmp_path), "events"))
     assert readers._INFERRED[path][1]["ts"].dataType.simpleString() == "bigint"
     assert ts(load_table(spark, str(tmp_path), "events")) == cold
-    assert ts(read_parquet(spark, path, "events")) == cold
     micros = sorted(spark.createDataFrame(
         [(n // 1000,) for n in nanos], "us bigint"
     ).selectExpr("timestamp_micros(us) AS ts").collect())

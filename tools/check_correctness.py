@@ -12,30 +12,14 @@ from __future__ import annotations
 import os
 import sys
 
-import duckdb
-
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from uber_data_pipeline_spark.catalog import TABLES  # noqa: E402
+from uber_data_pipeline_spark.harness import clear_all, duck_views  # noqa: E402
 from uber_data_pipeline_spark.session import get_spark  # noqa: E402
-
 from uber_data_pipeline_spark.testing import compare  # noqa: E402
 
 import __spark_entry__ as entrymod  # noqa: E402
 
-
-
-def _clear_all(spark) -> None:
-    """clearCache + unpersist all persistent RDDs: localCheckpoint
-    blocks survive clearCache and otherwise accumulate across a
-    multi-entry sweep (see bench.py's twin)."""
-    spark.catalog.clearCache()
-    try:
-        it = spark.sparkContext._jsc.sc().getPersistentRDDs().values().iterator()
-        while it.hasNext():
-            it.next().unpersist(False)
-    except Exception:  # noqa: BLE001
-        pass
 
 
 def main() -> int:
@@ -43,12 +27,7 @@ def main() -> int:
     only = set(sys.argv[2:])
     qs, oracles = entrymod.queries(), entrymod.oracle_sql()
 
-    con = duckdb.connect()
-    con.execute("SET temp_directory='/tmp/duckdb_spill'")
-    for t in TABLES:
-        p = os.path.join(sf_dir, f"{t}.parquet")
-        if os.path.exists(p):
-            con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
+    con = duck_views(sf_dir)
 
     spark = get_spark(shuffle_partitions=8, master="local[8]")
     spark.sparkContext.setLogLevel("ERROR")
@@ -64,7 +43,7 @@ def main() -> int:
             print(f"FAIL {name}: spark error: {e}")
             continue
         if name not in oracles:
-            _clear_all(spark)
+            clear_all(spark)
             print(f"ok?  {name}: rows-only check, {len(sdf)} rows (no oracle)")
             continue
         try:
@@ -79,7 +58,7 @@ def main() -> int:
         # unpersist them before the caller's action runs; drop them
         # here so storage memory doesn't accumulate across the sweep
         # (same per-query discipline as bench.py)
-        _clear_all(spark)
+        clear_all(spark)
         if problems:
             failed.append(name)
             print(f"FAIL {name}: " + "; ".join(problems))

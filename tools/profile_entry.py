@@ -32,19 +32,10 @@ from contextlib import redirect_stdout
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from uber_data_pipeline_spark.harness import clear_all, compile_warmup  # noqa: E402
 from uber_data_pipeline_spark.session import get_spark  # noqa: E402
 
 import __spark_entry__ as entrymod  # noqa: E402
-
-
-def _clear_all(spark) -> None:
-    spark.catalog.clearCache()
-    try:
-        it = spark.sparkContext._jsc.sc().getPersistentRDDs().values().iterator()
-        while it.hasNext():
-            it.next().unpersist(False)
-    except Exception:  # noqa: BLE001
-        pass
 
 
 NODE_PATTERNS = {
@@ -72,16 +63,7 @@ def main() -> int:
     spark = get_spark(app_name="udp-profile")
     spark.sparkContext.setLogLevel("ERROR")
 
-    # compile warm-up at the smallest SF (bench.py's policy)
-    warm_dir = os.path.join(os.path.dirname(sf_dir.rstrip("/")), "sf0.001")
-    if not os.path.isdir(warm_dir):
-        warm_dir = sf_dir
-    for n in names:
-        try:
-            qs[n](spark, warm_dir).count()
-        except Exception:  # noqa: BLE001
-            pass
-        _clear_all(spark)
+    compile_warmup(spark, [qs[n] for n in names], sf_dir)
 
     for n in names:
         rec: dict = {"entry": n, "sf_dir": sf_dir}
@@ -96,7 +78,7 @@ def main() -> int:
             t2 = time.perf_counter()
             construct.append(round(t1 - t0, 3))
             execute.append(round(t2 - t1, 3))
-            _clear_all(spark)
+            clear_all(spark)
         rec["construct_s"] = construct
         rec["execute_s"] = execute
         rec["construct_min"] = min(construct)
@@ -111,7 +93,7 @@ def main() -> int:
             }
         except Exception as e:  # noqa: BLE001
             rec["plan_err"] = str(e)[:200]
-        _clear_all(spark)
+        clear_all(spark)
         print(json.dumps(rec))
     spark.stop()
     return 0

@@ -17,28 +17,19 @@ from __future__ import annotations
 
 import json
 import os
-import subprocess
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from uber_data_pipeline_spark.harness import (  # noqa: E402
+    clear_all,
+    compile_warmup,
+    git_commit,
+    timed_noop_run,
+)
 from uber_data_pipeline_spark.session import get_spark  # noqa: E402
 
 import __spark_entry__ as entrymod  # noqa: E402
-
-
-def _clear_all(spark) -> None:
-    """clearCache + unpersist all persistent RDDs: localCheckpoint
-    blocks survive clearCache and otherwise accumulate across a
-    multi-entry sweep (see bench.py's twin)."""
-    spark.catalog.clearCache()
-    try:
-        it = spark.sparkContext._jsc.sc().getPersistentRDDs().values().iterator()
-        while it.hasNext():
-            it.next().unpersist(False)
-    except Exception:  # noqa: BLE001
-        pass
 
 
 REP_THRESHOLD_S = 0.3
@@ -56,28 +47,12 @@ def main() -> int:
     spark = get_spark(app_name="udp-rebench")
     spark.sparkContext.setLogLevel("ERROR")
 
-    from pyspark.sql import Observation
-    from pyspark.sql import functions as F
-
-    # compile warm-up (bench.py's pass, restricted to the subset):
-    # whole-stage-codegen compiles per generated stage source; run the
-    # same plans at the smallest SF so janino compile isn't billed
-    warm_dir = os.path.join(os.path.dirname(sf_dir.rstrip("/")), "sf0.001")
-    if not os.path.isdir(warm_dir):
-        warm_dir = "/root/testdata/sf0.001"
-    for n in names:
-        try:
-            qs[n](spark, warm_dir).count()
-        except Exception:  # noqa: BLE001
-            pass
-        _clear_all(spark)
-
-    from uber_data_pipeline_spark.testing import timed_noop_run
+    compile_warmup(spark, [qs[n] for n in names], sf_dir)
 
     out: dict = {}
     for n in names:
         best, reps, rows = timed_noop_run(
-            spark, qs[n], sf_dir, _clear_all, REP_THRESHOLD_S
+            spark, qs[n], sf_dir, clear_all, REP_THRESHOLD_S
         )
         out[n] = {
             "min_s": best,
@@ -86,12 +61,7 @@ def main() -> int:
         }
         print(f"{n}: {out[n]}", file=sys.stderr, flush=True)
 
-    commit = subprocess.run(
-        ["git", "rev-parse", "--short", "HEAD"],
-        capture_output=True,
-        text=True,
-    ).stdout.strip()
-    print(json.dumps({"sf_dir": sf_dir, "commit": commit, "entries": out}))
+    print(json.dumps({"sf_dir": sf_dir, "commit": git_commit(), "entries": out}))
     return 0
 
 

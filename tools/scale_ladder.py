@@ -26,12 +26,16 @@ from __future__ import annotations
 import json
 import math
 import os
-import subprocess
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from uber_data_pipeline_spark.harness import (  # noqa: E402
+    clear_all,
+    compile_warmup,
+    git_commit,
+    timed_noop_run,
+)
 from uber_data_pipeline_spark.session import get_spark  # noqa: E402
 
 import __spark_entry__ as entrymod  # noqa: E402
@@ -65,28 +69,6 @@ SFS = [
 
 
 
-def _clear_all(spark) -> None:
-    """clearCache + unpersist all persistent RDDs: localCheckpoint
-    blocks survive clearCache and otherwise accumulate across a
-    multi-entry sweep (see bench.py's twin)."""
-    spark.catalog.clearCache()
-    try:
-        it = spark.sparkContext._jsc.sc().getPersistentRDDs().values().iterator()
-        while it.hasNext():
-            it.next().unpersist(False)
-    except Exception:  # noqa: BLE001
-        pass
-
-
-def _measure(spark, fn, sf_dir: str) -> tuple[float, int]:
-    # shared bench kernel (uber_data_pipeline_spark.testing) — one
-    # source of truth for the rep/threshold/spread/min methodology
-    from uber_data_pipeline_spark.testing import timed_noop_run
-
-    best, _reps, rows = timed_noop_run(spark, fn, sf_dir, _clear_all)
-    return best, rows
-
-
 def _slope(points: list[tuple[float, float]]) -> float:
     """OLS slope of log(sec) vs log(scale) — the scaling exponent."""
     xs = [math.log(s) for s, _ in points]
@@ -114,19 +96,9 @@ def main() -> int:
     present = [(tag, d, x) for tag, d, x in SFS if os.path.isdir(d)]
     missing = [tag for tag, d, _ in SFS if not os.path.isdir(d)]
 
-    # compile warm-up: same plans at the smallest SF so janino compile
-    # time isn't billed to the first ladder rung
-    for n in names:
-        try:
-            qs[n](spark, "/root/testdata/sf0.001").count()
-        except Exception:  # noqa: BLE001
-            pass
-        _clear_all(spark)
-
-    commit = subprocess.run(
-        ["git", "rev-parse", "--short", "HEAD"],
-        capture_output=True, text=True,
-    ).stdout.strip()
+    # compile warm-up, so janino compile time isn't billed to the first rung
+    compile_warmup(spark, [qs[n] for n in names], SFS[0][1])
+    commit = git_commit()
 
     entries: dict = {}
     for n in names:
@@ -134,7 +106,7 @@ def main() -> int:
         rpts: list[tuple[float, float]] = []
         row: dict = {"secs": {}, "rows": {}}
         for tag, d, scale in present:
-            sec, rows = _measure(spark, qs[n], d)
+            sec, _reps, rows = timed_noop_run(spark, qs[n], d, clear_all)
             row["secs"][tag] = sec
             row["rows"][tag] = rows
             pts.append((scale, sec))

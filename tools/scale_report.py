@@ -25,6 +25,9 @@ import os
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+
+from uber_data_pipeline_spark.harness import git_commit  # noqa: E402
 
 QUADRATIC_DOCUMENTED = {
     # exact all-pairs / gemm baselines (the IVF/banded variants are
@@ -118,12 +121,6 @@ def main() -> int:
         if not ok:
             flagged.append(name)
 
-    import subprocess
-
-    commit = subprocess.run(
-        ["git", "rev-parse", "--short", "HEAD"],
-        capture_output=True, text=True,
-    ).stdout.strip()
     out = {
         "metric": "per-query wall seconds at 10x scale (sf0.1 -> sf1.0)",
         "sf_base": 0.1,
@@ -132,7 +129,7 @@ def main() -> int:
         # one HEAD (r9 verdict item 5 — mixed-commit rows only appear
         # after targeted rebench_entries.py refreshes, which stamp
         # per-row measured_commit)
-        "measured_commit": commit,
+        "measured_commit": git_commit(),
         "generator": "tools/gen_sf.py (10x replication, cohort-preserving keys, near-dup-linear documents)",
         "n_queries": len(rows),
         "total_sf0.1_s": round(sum(base.get(k, 0) for k in rows), 1),

@@ -29,11 +29,9 @@ import sys
 import threading
 import time
 
-import duckdb
-
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from uber_data_pipeline_spark.catalog import TABLES  # noqa: E402
+from uber_data_pipeline_spark.harness import clear_all, duck_views  # noqa: E402
 from uber_data_pipeline_spark.session import get_spark  # noqa: E402
 from uber_data_pipeline_spark.testing import compare  # noqa: E402
 
@@ -41,19 +39,6 @@ import __spark_entry__ as entrymod  # noqa: E402
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-
-
-def _clear_all(spark) -> None:
-    """clearCache + unpersist all persistent RDDs: localCheckpoint
-    blocks survive clearCache and otherwise accumulate across a
-    multi-entry sweep (see bench.py's twin)."""
-    spark.catalog.clearCache()
-    try:
-        it = spark.sparkContext._jsc.sc().getPersistentRDDs().values().iterator()
-        while it.hasNext():
-            it.next().unpersist(False)
-    except Exception:  # noqa: BLE001
-        pass
 
 
 def _seed_verified(out_path: str) -> set[str]:
@@ -254,6 +239,31 @@ def _run_oracle(con, sql: str, timeout: float):
         timer.cancel()
 
 
+def _check_entry(spark, con, name, build, o_sql, timeout):
+    """One per-entry check: ``build()`` runs the entry on Spark and
+    returns its pandas result, the oracle runs under ``timeout``, the
+    two are compared, and the session is cleared. Returns (status,
+    detail) with status "pass", "fail" or "timeout"."""
+    t0 = time.monotonic()
+    try:
+        try:
+            sdf = build()
+        except Exception as e:  # noqa: BLE001
+            return "fail", f"spark error: {e}"
+        try:
+            odf = _run_oracle(con, o_sql, timeout)
+        except Exception as e:  # noqa: BLE001
+            if "INTERRUPT" in str(e).upper():
+                return "timeout", "oracle timeout"
+            return "fail", f"oracle error: {e}"
+        problems = compare(name, sdf, odf)
+        if problems:
+            return "fail", "; ".join(problems)
+        return "pass", f"{len(sdf)} rows, {time.monotonic() - t0:.1f}s"
+    finally:
+        clear_all(spark)
+
+
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("sf_dir", nargs="?", default=".artifacts/sf1.0")
@@ -325,16 +335,7 @@ def main() -> int:
             json.dump(out, fh, indent=1)
         os.replace(tmp, args.out)
 
-    con = duckdb.connect()
-    # Spill outside the repo: DuckDB's default temp_directory is cwd-relative
-    # (".tmp"), which once swept 7.6 GB of spill files into a git snapshot.
-    con.execute("SET temp_directory='/tmp/duckdb_spill'")
-    for t in TABLES:
-        p = os.path.join(args.sf_dir, f"{t}.parquet")
-        if os.path.exists(p):
-            con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')"
-            )
+    con = duck_views(args.sf_dir)
 
     if not args.no_cte_cache:
         from uber_data_pipeline_spark.queries.training import _SHINGLES_CTE
@@ -358,6 +359,25 @@ def main() -> int:
         "vec_id % sample_mod == 0 query slice (rows exact, coverage "
         "sampled) because the full oracle is quadratic DuckDB-side"
     )
+
+    def check(name, build, o_sql, ok, tag=""):
+        status, detail = _check_entry(
+            spark, con, name, build, o_sql, args.oracle_timeout
+        )
+        word = {"pass": "PASS", "fail": "FAIL", "timeout": "SKIP"}[status]
+        print(f"{word} {name}{tag}: {detail}", flush=True)
+        if status == "pass":
+            ok.add(name)
+            # a pass is the entry's evidence now: an earlier FULL
+            # oracle's DuckDB timeout is no longer an open item
+            while name in timeouts:
+                timeouts.remove(name)
+        elif status == "timeout":
+            timeouts.append(name)
+        else:
+            failed.append(name)
+        _flush(note)
+
     if args.sampled:
         specs = _sampled_specs(args.sample_mod)
         names = [n for n in qs if n in specs and n not in verified]
@@ -367,54 +387,17 @@ def main() -> int:
             if time.monotonic() - t_start > args.budget:
                 note += "; sampled pass stopped on time budget"
                 break
-            t0 = time.monotonic()
-            spec = specs[name]
-            o_sql, row_filter = spec[0], spec[1]
-            spark_fn = spec[2] if len(spec) > 2 else None
-            try:
-                src = (
-                    spark_fn(spark, args.sf_dir)
-                    if spark_fn is not None
-                    else qs[name](spark, args.sf_dir)
-                )
-                sdf = row_filter(src.toPandas()).reset_index(drop=True)
-            except Exception as e:  # noqa: BLE001
-                failed.append(name)
-                print(f"FAIL {name} (sampled): spark error: {e}", flush=True)
-                _clear_all(spark)
-                _flush(note)
-                continue
-            try:
-                odf = _run_oracle(con, o_sql, args.oracle_timeout)
-            except Exception as e:  # noqa: BLE001
-                msg = str(e)
-                if "INTERRUPT" in msg.upper() or "interrupted" in msg:
-                    timeouts.append(name)
-                    print(f"SKIP {name} (sampled): oracle timeout", flush=True)
-                else:
-                    failed.append(name)
-                    print(f"FAIL {name} (sampled): oracle error: {e}", flush=True)
-                _clear_all(spark)
-                _flush(note)
-                continue
-            problems = compare(name, sdf, odf)
-            _clear_all(spark)
-            if problems:
-                failed.append(name)
-                print(f"FAIL {name} (sampled): " + "; ".join(problems), flush=True)
-            else:
-                sampled_ok.add(name)
-                # the timeout was the FULL oracle's DuckDB cost; the
-                # sampled row is the entry's sf1 evidence now — don't
-                # also report it as an open timeout
-                timeouts = [t for t in timeouts if t != name]
-                dt = time.monotonic() - t0
-                print(
-                    f"PASS {name} (sampled 1/{args.sample_mod}, "
-                    f"{len(sdf)} rows, {dt:.1f}s)",
-                    flush=True,
-                )
-            _flush(note)
+            o_sql, row_filter, *spark_fn = specs[name]
+            fn = spark_fn[0] if spark_fn else qs[name]
+            check(
+                name,
+                lambda: row_filter(
+                    fn(spark, args.sf_dir).toPandas()
+                ).reset_index(drop=True),
+                o_sql,
+                sampled_ok,
+                f" (sampled 1/{args.sample_mod})",
+            )
         _flush(note)
         print(
             f"\nsampled-verified {len(sampled_ok)}; failed={sorted(set(failed))};"
@@ -427,38 +410,12 @@ def main() -> int:
         if time.monotonic() - t_start > args.budget:
             note += "; stopped on time budget"
             break
-        t0 = time.monotonic()
-        try:
-            sdf = qs[name](spark, args.sf_dir).toPandas()
-        except Exception as e:  # noqa: BLE001
-            failed.append(name)
-            print(f"FAIL {name}: spark error: {e}", flush=True)
-            _clear_all(spark)
-            _flush(note)
-            continue
-        try:
-            odf = _run_oracle(con, oracles[name], args.oracle_timeout)
-        except Exception as e:  # noqa: BLE001
-            msg = str(e)
-            if "INTERRUPT" in msg.upper() or "interrupted" in msg:
-                timeouts.append(name)
-                print(f"SKIP {name}: oracle timeout", flush=True)
-            else:
-                failed.append(name)
-                print(f"FAIL {name}: oracle error: {e}", flush=True)
-            _clear_all(spark)
-            _flush(note)
-            continue
-        problems = compare(name, sdf, odf)
-        _clear_all(spark)
-        if problems:
-            failed.append(name)
-            print(f"FAIL {name}: " + "; ".join(problems), flush=True)
-        else:
-            verified.add(name)
-            dt = time.monotonic() - t0
-            print(f"PASS {name} ({len(sdf)} rows, {dt:.1f}s)", flush=True)
-        _flush(note)
+        check(
+            name,
+            lambda: qs[name](spark, args.sf_dir).toPandas(),
+            oracles[name],
+            verified,
+        )
 
     _flush(note)
     print(

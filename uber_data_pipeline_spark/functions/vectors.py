@@ -39,24 +39,10 @@ def cosine_duck(a: str, b: str, round_to: int = COSINE_ROUND) -> str:
     )
 
 
-def srp_bucket_spark(vec: str, n_bits: int) -> str:
+def srp_bucket_duck(vec: str, n_bits: int) -> str:
     """Signed-random-projection bucket id: bit j = sign of the dot
     product with a pseudo-random ±1 hyperplane derived from
     md5(j, dim) nibble parity — deterministic, no stored model."""
-    proj = (
-        f"aggregate(sequence(1, size({vec})), CAST(0 AS double), "
-        f"(s, dd) -> s + CAST(element_at({vec}, dd) AS double) * "
-        f"(CASE WHEN (instr('0123456789abcdef', "
-        f"substring(md5(concat(cast(j AS string), ',', cast(dd AS string))), 1, 1))-1) % 2 = 0 "
-        f"THEN 1.0 ELSE -1.0 END))"
-    )
-    return (
-        f"aggregate(transform(sequence(0, {n_bits - 1}), "
-        f"j -> CASE WHEN {proj} >= 0 THEN shiftleft(1, j) ELSE 0 END), 0, (a, b) -> a + b)"
-    )
-
-
-def srp_bucket_duck(vec: str, n_bits: int) -> str:
     proj = (
         f"list_sum(list_transform(range(1, len({vec})+1), dd -> {vec}[dd]::DOUBLE * "
         f"(CASE WHEN (instr('0123456789abcdef', "

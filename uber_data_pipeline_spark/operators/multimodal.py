@@ -46,7 +46,7 @@ def attach_media(docs: DataFrame) -> DataFrame:
         .when(F.col("kind") == "audio", _MIME["audio"])
         .otherwise(_MIME["text"])
     )
-    # r13 spread A/B (tools/spread_ab.py, committed in SURVEY §6): the
+    # r13 spread A/B (committed in SURVEY §6): the
     # decode-stub and frame-sample kernels are LIGHT maps (md5 over
     # small payloads) — spreading here LOST 0.33-0.40 s at sf0.1
     # (exactly the light-map pattern operators/spread.py warns about),

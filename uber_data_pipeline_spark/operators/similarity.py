@@ -1604,10 +1604,6 @@ def _sq4(a: str, b: str, idx) -> str:
     return f"((({t[0]} + {t[1]}) + {t[2]}) + {t[3]})"
 
 
-def _idx_spark(name: str, i: int) -> str:
-    return f"element_at({name}, {i})"
-
-
 def _idx_duck(name: str, i: int) -> str:
     return f"{name}[{i}]"
 

@@ -72,8 +72,9 @@ MAX_PARTITIONS_KEY = "spark.udp.spread.maxPartitions"
 # Registry entries whose plans flow through a spread_rowlocal site —
 # the audit surface for tests/test_r13_operators.py's differential
 # plan invariant (spread may add ROUND-ROBIN exchanges only, never
-# change the keyed-shuffle shape) and for tools/spread_ab.py re-audits.
-# r13 A/B (committed in SURVEY §6): every site below beats its
+# change the keyed-shuffle shape) and for spread on/off re-audits.
+# r13 A/B (committed in SURVEY §6; the A/B tool, tools/spread_ab.py, is
+# in git history at c4cc2a8): every site below beats its
 # un-spread twin at sf1 — the scale-direction proxy — most by 2-8 s
 # (paragraph dedup 13.6 -> 5.3, substring windows 8.6 -> 2.9, bigram
 # LM 9.0 -> 4.4); a few pay a sub-second tax at the toy sf0.1 where

@@ -185,7 +185,7 @@ def due_run(registry: ModelRegistry, as_of) -> list[tuple]:
     no data rows touched."""
     from uber_data_pipeline_spark.plans.cron import next_fire
 
-    level = _kahn_levels(registry)
+    level = _levels(registry)
     ordered = sorted(
         (m for m in registry.models.values() if m.schedule is not None),
         key=lambda m: (level[m.name], m.name),
@@ -196,29 +196,10 @@ def due_run(registry: ModelRegistry, as_of) -> list[tuple]:
     ]
 
 
-def _kahn_levels(registry: ModelRegistry) -> dict[str, int]:
-    """Kahn depth per model over registry-internal dependency edges,
-    with a cycle guard: a dependency cycle raises ValueError naming
-    the revisited model (matching topo_order's contract) instead of
-    recursing unboundedly."""
-    names = set(registry.models)
-    level: dict[str, int] = {}
-
-    def depth(name: str, seen: frozenset = frozenset()) -> int:
-        if name in seen:
-            raise ValueError(f"dependency cycle through model {name!r}")
-        if name not in level:
-            internal = [d for d in registry.models[name].deps if d in names]
-            level[name] = (
-                0
-                if not internal
-                else 1 + max(depth(d, seen | {name}) for d in internal)
-            )
-        return level[name]
-
-    for n in registry.models:
-        depth(n)
-    return level
+def _levels(registry: ModelRegistry) -> dict[str, int]:
+    """Model name -> its :meth:`ModelRegistry.topo_levels` index (a
+    dependency cycle raises topo_order's ValueError)."""
+    return {m.name: i for i, lvl in enumerate(registry.topo_levels()) for m in lvl}
 
 
 def downstream_closure(registry: ModelRegistry, name: str) -> list[str]:
@@ -236,7 +217,7 @@ def downstream_closure(registry: ModelRegistry, name: str) -> list[str]:
                 out.add(m.name)
                 changed = True
     out.discard(name)
-    level = _kahn_levels(registry)
+    level = _levels(registry)
     return sorted(out, key=lambda n: (level[n], n))
 
 

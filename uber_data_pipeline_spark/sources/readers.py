@@ -1,10 +1,13 @@
-"""Explicit-schema readers for parquet / csv / json.
+"""Explicit-schema readers for csv / json / orc / xml / JDBC, and the
+schema-cached parquet read.
 
 The reference ingests via Airbyte connectors with declared catalogs
 (source schema pinned per stream). The Spark-first equivalent: every
-read carries an explicit StructType — schema inference is a full-scan
-trap at 100 TB (and a correctness trap on empty partitions) — plus
-options tuned for scale:
+csv/json/orc/xml read carries an explicit StructType — schema
+inference is a full-scan trap at 100 TB (and a correctness trap on
+empty partitions) — plus options tuned for scale. Parquet declares its
+own schema in the footers; :func:`read_parquet_inferred` infers it
+once per file identity:
 
 - ``recursiveFileLookup``/partition discovery off unless asked: the
   file listing itself is a scale cost.
@@ -19,8 +22,6 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-from uber_data_pipeline_spark.session import tune_runtime
 
 # Pinned source schemas as DDL strings (the "declared catalog") —
 # kept as strings so importing this module needs no live session;
@@ -57,11 +58,6 @@ SCHEMAS: dict[str, str] = {
         "documents": "doc_id bigint, text string, lang string, source string, n_chars bigint",
         "embeddings": "vec_id bigint, embedding array<float>, label int",
 }
-
-
-def struct_schema(table: str) -> T.StructType:
-    """Parsed StructType (needs an active session)."""
-    return T._parse_datatype_string(SCHEMAS[table])  # noqa: SLF001
 
 
 def normalize_events(df: DataFrame) -> DataFrame:
@@ -125,24 +121,6 @@ def read_parquet_inferred(spark: SparkSession, path: str) -> DataFrame:
     df = spark.read.parquet(path)
     _INFERRED[path] = (ident, df.schema)
     return df
-
-
-def read_parquet(
-    spark: SparkSession, path: str, table: str | None = None
-) -> DataFrame:
-    """Parquet with a pinned schema when the table is known; events
-    get the nanos normalization applied, on the schema the file itself
-    declares (read through :func:`read_parquet_inferred`)."""
-    reader = spark.read
-    if table == "events":
-        # no pinned schema here: the footer decides nanos-vs-micros and
-        # normalize_events() reconciles — a pin would break on one of
-        # the two encodings the generator has shipped.
-        tune_runtime(spark)
-        return normalize_events(read_parquet_inferred(spark, path))
-    if table in SCHEMAS:
-        reader = reader.schema(SCHEMAS[table])
-    return reader.parquet(path)
 
 
 def read_csv(

@@ -1,8 +1,9 @@
-"""Oracle-comparison helpers shared by tests/ and tools/.
+"""Oracle-comparison helpers shared by tests/, tools/ and bench.py.
 
 Replicates the round driver's check: row count, column-name set, and
 order-insensitive value equality between a Spark result and the
-DuckDB oracle for the same query.
+DuckDB oracle for the same query. This module holds only the oracle
+helpers; the measurement harness is :mod:`uber_data_pipeline_spark.harness`.
 """
 
 from __future__ import annotations
@@ -80,44 +81,3 @@ def compare(name: str, spark_df: pd.DataFrame, oracle_df: pd.DataFrame) -> list[
             )
     return problems
 
-
-def timed_noop_run(spark, fn, sf_dir, clear_all, threshold_s: float = 0.3):
-    """THE shared bench measurement kernel (r12 — previously
-    copy-pasted in bench.py, tools/rebench_entries.py and
-    tools/scale_ladder.py, whose docstrings promise byte-identical
-    methodology; one estimator change already had to be applied three
-    times in lockstep).
-
-    Times fn(spark, sf_dir) with a full-column noop-sink write +
-    observe() row count: up to 4 reps — rep 1 always; sub-threshold
-    entries stop there; reps 2-3 otherwise; a 4th only when the first
-    three spread > 2x (bimodal host contention — one more draw from
-    the fast regime). Estimator = MIN of reps (contention only ever
-    ADDS time; see bench.py's comment / VERDICT r11 item 1).
-    ``clear_all`` is called between reps (cache + localCheckpoint
-    cleanup is the caller's policy). Returns (min_s, reps, rows)."""
-    import time
-
-    from pyspark.sql import Observation
-    from pyspark.sql import functions as F
-
-    reps: list[float] = []
-    rows = None
-    for i in range(4):
-        t0 = time.perf_counter()
-        obs = Observation()
-        (
-            fn(spark, sf_dir)
-            .observe(obs, F.count(F.lit(1)).alias("n"))
-            .write.format("noop")
-            .mode("overwrite")
-            .save()
-        )
-        rows = obs.get["n"]
-        reps.append(round(time.perf_counter() - t0, 3))
-        clear_all(spark)
-        if i == 0 and reps[0] <= threshold_s:
-            break
-        if i == 2 and max(reps) <= 2.0 * min(reps):
-            break
-    return min(reps), reps, rows
