@@ -148,11 +148,11 @@ def main() -> int:
     # land on whichever queries the rotation happens to put first
     compile_warmup(spark, entrymod.queries().values(), sf_dir)
 
-    # staging warm-up pass: several entries build a fingerprint-bound
+    # staging warm-up pass: several entries build a source-bound
     # per-SF artifact on first touch (snapshot lakes, LSH index, flat
     # landing dirs, media lake, physical layouts). The builds are
     # one-time ETL — in production the index/lake build is a separate
-    # job from query serving — but the fingerprint guard (sources/
+    # job from query serving — but the staging guard (sources/
     # staging.py) rebuilds them whenever the driver regenerates
     # testdata, which previously billed the whole rebuild to whichever
     # timed run came first each round (r3: snapshot_python_datasource

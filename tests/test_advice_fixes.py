@@ -2,7 +2,8 @@
 
 Each test pins one of the four low-severity advisor findings:
   1. norms_arrow kernel: empty Arrow batch / null embedding row.
-  2. staging: _stage_flat_once delegates to sources.staging.ensure_staged.
+  2. staging: ensure_staged with the spark_success valid_fn (the flat
+     landings' guard) restages on a missing _SUCCESS.
   3. fill_micro parity under a budget that does not divide 1_000_000.
   4. driver-heap default derived from available memory (capped).
 """
@@ -46,14 +47,14 @@ def test_norms_arrow_all_empty_input(spark):
     assert similarity.norms_arrow(emb).count() == 0
 
 
-def test_stage_flat_once_delegates_with_success_postcondition(tmp_path):
-    """ADVICE r3 item 2: the flat-stage helper now delegates to
-    ensure_staged; a matching marker with a MISSING _SUCCESS must
-    restage, and a build that fails to produce _SUCCESS must raise
-    rather than publish a marker."""
+def test_ensure_staged_with_success_postcondition(tmp_path):
+    """ADVICE r3 item 2: the flat landings stage through ensure_staged
+    with the spark_success valid_fn; a matching marker with a MISSING
+    _SUCCESS must restage, and a build that fails to produce _SUCCESS
+    must raise rather than publish a marker."""
     import os
 
-    from uber_data_pipeline_spark.queries.pipeline import _stage_flat_once
+    from uber_data_pipeline_spark.sources.staging import ensure_staged, spark_success
 
     stage = str(tmp_path / "flat")
     builds = []
@@ -63,19 +64,19 @@ def test_stage_flat_once_delegates_with_success_postcondition(tmp_path):
         os.makedirs(tgt, exist_ok=True)
         open(os.path.join(tgt, "_SUCCESS"), "w").close()
 
-    _stage_flat_once(stage, {"v": 1}, good_write)
-    _stage_flat_once(stage, {"v": 1}, good_write)
+    ensure_staged(stage, {"v": 1}, good_write, valid_fn=spark_success)
+    ensure_staged(stage, {"v": 1}, good_write, valid_fn=spark_success)
     assert len(builds) == 1  # second call reuses
 
     os.remove(os.path.join(stage, "_SUCCESS"))
-    _stage_flat_once(stage, {"v": 1}, good_write)
+    ensure_staged(stage, {"v": 1}, good_write, valid_fn=spark_success)
     assert len(builds) == 2  # missing _SUCCESS -> restage
 
     def bad_write(tgt):
         os.makedirs(tgt, exist_ok=True)  # finishes without _SUCCESS
 
     with pytest.raises(RuntimeError):
-        _stage_flat_once(str(tmp_path / "bad"), {"v": 1}, bad_write)
+        ensure_staged(str(tmp_path / "bad"), {"v": 1}, bad_write, valid_fn=spark_success)
 
 
 def test_default_driver_mem_bounds():

@@ -154,6 +154,15 @@ def test_scale_ladder_slope_fit():
     assert math.isfinite(_slope([(1.0, 0.0), (10.0, 0.001)]))  # log clamp
 
 
+def test_scale_ladder_one_rung_fits_no_slope():
+    """A run with only the sf0.1 rung records its seconds and fits no
+    exponent, instead of dividing by a zero spread."""
+    from tools.scale_ladder import _fit
+
+    assert _fit([(1.0, 0.42)], [(120, 0.42)]) == {}
+    assert set(_fit([(1.0, 0.4), (10.0, 4.0)], [(120, 0.4), (120, 4.0)])) == {"slope"}
+
+
 def test_subseq_motif_properties(spark):
     """Motif-search invariants on the fixture series: offsets respect
     the exclusion zone (no trivial match with the query window),

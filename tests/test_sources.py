@@ -476,13 +476,14 @@ def test_partitioned_and_simple_stream_readers_agree(spark, tmp_path):
 
 def test_ensure_staged_rebuilds_on_source_change(tmp_path):
     """The staleness contract that the sf1 soak motivated: a staged
-    derivative must rebuild when its SOURCE fingerprint changes, and
-    must reuse (not rebuild) when nothing changed."""
+    derivative must rebuild when its SOURCE identity changes, and
+    must reuse (not rebuild) when nothing changed — which also needs
+    the identity to survive the marker's JSON round trip."""
     import time
 
     from uber_data_pipeline_spark.sources.staging import (
         ensure_staged,
-        source_fingerprint,
+        file_identity,
     )
 
     src = tmp_path / "source.parquet"
@@ -494,7 +495,7 @@ def test_ensure_staged_rebuilds_on_source_change(tmp_path):
         builds.append(1)
         (tmp_path / "derived" / "data").write_text("built")
 
-    params = lambda: {"what": "t", "src": source_fingerprint(str(src))}  # noqa: E731
+    params = lambda: {"what": "t", "src": file_identity(str(src))}  # noqa: E731
     ensure_staged(root, params(), build)
     ensure_staged(root, params(), build)
     assert len(builds) == 1  # second call reused
@@ -504,17 +505,46 @@ def test_ensure_staged_rebuilds_on_source_change(tmp_path):
     assert len(builds) == 2  # source change forced a rebuild
 
 
+def test_ensure_staged_sees_an_equal_size_older_file_in_a_source_dir(tmp_path):
+    """A file in a source DIRECTORY replaced by one of equal size and an
+    older mtime leaves the directory's total size and newest mtime
+    unchanged; the per-file identity must still see it."""
+    from uber_data_pipeline_spark.sources.staging import (
+        ensure_staged,
+        file_identity,
+    )
+
+    src = tmp_path / "lake"
+    src.mkdir()
+    a, b = src / "part-0.parquet", src / "part-1.parquet"
+    a.write_bytes(b"aaaa")
+    b.write_bytes(b"bbbb")
+    a_ns = os.stat(a).st_mtime_ns
+    os.utime(b, ns=(a_ns + 10**9, a_ns + 10**9))  # b is the newest file
+    root = str(tmp_path / "derived")
+    builds = []
+    params = lambda: {"src": file_identity(str(src))}  # noqa: E731
+    ensure_staged(root, params(), builds.append)
+    a.unlink()
+    a.write_bytes(b"AAAA")
+    os.utime(a, ns=(a_ns - 10**9, a_ns - 10**9))
+    ensure_staged(root, params(), builds.append)
+    assert len(builds) == 2
+
+
 def test_events_landing_dir_relinks_on_source_change(tmp_path, monkeypatch):
     """The stream landing hardlink must re-stage when the source
     parquet is REPLACED (old hardlink keeps the dead inode alive, so
-    an existence check would stream stale data)."""
+    an existence check would stream stale data) — also when the
+    replacement has the same size and the same mtime_ns."""
+    import uber_data_pipeline_spark.sources.staging as staging
     import uber_data_pipeline_spark.streaming.events as SE
 
     sfdir = tmp_path / "sfX"
     sfdir.mkdir()
     src = sfdir / "events.parquet"
     src.write_bytes(b"gen-1")
-    monkeypatch.setattr(SE, "_ARTIFACTS", str(tmp_path / "art"))
+    monkeypatch.setattr(staging, "ARTIFACT_ROOT", str(tmp_path / "art"))
     d1 = SE.events_landing_dir(str(sfdir))
     staged = os.path.join(d1, "events.parquet")
     assert open(staged, "rb").read() == b"gen-1"
@@ -523,6 +553,26 @@ def test_events_landing_dir_relinks_on_source_change(tmp_path, monkeypatch):
     src.write_bytes(b"gen-2-longer")
     d2 = SE.events_landing_dir(str(sfdir))
     assert open(os.path.join(d2, "events.parquet"), "rb").read() == b"gen-2-longer"
+    # same size, same mtime_ns, new inode: only the inode tells
+    st = os.stat(src)
+    src.unlink()
+    src.write_bytes(b"gen-3-LONGER")
+    os.utime(src, ns=(st.st_atime_ns, st.st_mtime_ns))
+    d3 = SE.events_landing_dir(str(sfdir))
+    assert open(os.path.join(d3, "events.parquet"), "rb").read() == b"gen-3-LONGER"
+
+
+def test_warm_media_lake_runs_no_job(spark, tmp_path, monkeypatch):
+    """A warm read of the staged media lake reuses the stage and the
+    cached schema: no Spark job."""
+    import uber_data_pipeline_spark.sources.staging as staging
+    from uber_data_pipeline_spark.queries.training import _media_lake
+
+    monkeypatch.setattr(staging, "ARTIFACT_ROOT", str(tmp_path / "art"))
+    cold = _media_lake(spark, SF_DIR)
+    warm, jobs = spark_jobs(spark, lambda: _media_lake(spark, SF_DIR))
+    assert jobs == 0
+    assert warm.schema == cold.schema
 
 
 def test_expire_snapshots_gc_and_safety(spark):

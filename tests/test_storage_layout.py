@@ -190,3 +190,34 @@ def test_merge_sweeps_swap_aside_left_by_a_crash(spark):
     assert not any(d.endswith("__swap_aside") for d in os.listdir(path))
     assert not os.path.exists(aside)
     shutil.rmtree(path, ignore_errors=True)
+
+
+def test_bucketed_layout_restages_on_a_same_second_rewrite(spark, tmp_path, monkeypatch):
+    """The staged bucketed layout is bound to its sources' full
+    mtime_ns: an orders.parquet rewrite inside the same whole second
+    (same size) must restage both tables, and the answer must not
+    change."""
+    import uber_data_pipeline_spark.sources.staging as staging
+    from uber_data_pipeline_spark.queries.pipeline import bucketed_join_revenue
+
+    monkeypatch.setattr(staging, "ARTIFACT_ROOT", str(tmp_path / "art"))
+    sf = tmp_path / "sfbq"
+    sf.mkdir()
+    for tbl in ("orders", "lineitem"):
+        shutil.copyfile(os.path.join(SF_DIR, f"{tbl}.parquet"), sf / f"{tbl}.parquet")
+    layout = os.path.join(staging.artifact_dir("bucketed_q", str(sf)), "orders")
+
+    def parts():
+        return sorted(f for f in os.listdir(layout) if f.startswith("part-"))
+
+    first = sorted(bucketed_join_revenue(spark, str(sf)).collect())
+    staged = parts()
+    assert sorted(bucketed_join_revenue(spark, str(sf)).collect()) == first
+    assert parts() == staged  # unchanged sources: reused
+
+    src = sf / "orders.parquet"
+    ns = os.stat(src).st_mtime_ns
+    same_second = ns - 1 if ns % 10**9 else ns + 1
+    os.utime(src, ns=(same_second, same_second))
+    assert sorted(bucketed_join_revenue(spark, str(sf)).collect()) == first
+    assert parts() != staged  # rewritten with new job ids: restaged

@@ -18,7 +18,8 @@ Usage:
 Defaults: BENCH_ladder.json at the repo root, the LADDER entry set
 below. SF dirs are /root/testdata/sf0.1 plus .artifacts/sf{1,2,5}.0
 (generate with tools/gen_sf.py N_COPIES in {10, 20, 50}); missing SF
-dirs are skipped and recorded, never silently interpolated.
+dirs are skipped and recorded, never silently interpolated. With one
+rung present the seconds are recorded and no slope is fitted.
 """
 
 from __future__ import annotations
@@ -79,6 +80,23 @@ def _slope(points: list[tuple[float, float]]) -> float:
     return sum((x - mx) * (y - my) for x, y in zip(xs, ys)) / denom
 
 
+def _fit(pts: list[tuple[float, float]], rpts: list[tuple[float, float]]) -> dict:
+    """The fitted exponents of one entry: ``slope`` vs scale and
+    ``slope_vs_output_rows`` vs output rows, each only when its points
+    span more than one x (one rung, or constant output, has no slope).
+
+    ``slope_vs_output_rows`` distinguishes output-bound plans
+    (density-bound joins whose match count grows faster than input —
+    an exponent ~<= 1 proves the wall tracks the answer size, not a
+    superlinear plan) from compute-bound ones."""
+    out = {}
+    if len({s for s, _ in pts}) > 1:
+        out["slope"] = round(_slope(pts), 3)
+    if len({r for r, _ in rpts}) > 1:
+        out["slope_vs_output_rows"] = round(_slope(rpts), 3)
+    return out
+
+
 def main() -> int:
     out_path = sys.argv[1] if len(sys.argv) > 1 else os.path.join(
         REPO, "BENCH_ladder.json"
@@ -113,14 +131,7 @@ def main() -> int:
             rpts.append((max(rows, 1), sec))
             print(f"{n} @ {tag}: {sec}s ({rows} rows)", file=sys.stderr,
                   flush=True)
-        row["slope"] = round(_slope(pts), 3)
-        # exponent of wall vs OUTPUT rows: distinguishes output-bound
-        # plans (density-bound joins whose match count grows faster
-        # than input — slope_vs_output ~<= 1 proves the wall tracks
-        # the answer size, not a superlinear plan) from compute-bound
-        # ones; NaN-safe: constant output degenerates to the 0 slope
-        if len({r for r, _ in rpts}) > 1:
-            row["slope_vs_output_rows"] = round(_slope(rpts), 3)
+        row.update(_fit(pts, rpts))
         row["measured_commit"] = commit
         entries[n] = row
 
@@ -155,7 +166,7 @@ def main() -> int:
     }
     with open(out_path, "w") as fh:
         json.dump(out, fh, indent=1)
-    print(json.dumps({n: e["slope"] for n, e in entries.items()}))
+    print(json.dumps({n: e.get("slope") for n, e in entries.items()}))
     return 0
 
 

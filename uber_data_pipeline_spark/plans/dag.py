@@ -147,12 +147,12 @@ def refresh_incremental(
 
     stored_path = os.path.join(out_dir, name)
     # 1) the previous scheduled run: full build of the base window
-    model.build(spark, incremental_filter=base_filter).write.mode(
-        "overwrite"
-    ).parquet(stored_path)
+    base = model.build(spark, incremental_filter=base_filter)
+    base.write.mode("overwrite").parquet(stored_path)
 
-    # 2) the refresh: delta partials only + monoid merge
-    stored = spark.read.parquet(stored_path)
+    # 2) the refresh: delta partials only + monoid merge. Both reads
+    # use the schema of the frame that wrote the files, as run_dag does.
+    stored = spark.read.schema(base.schema).parquet(stored_path)
     delta = model.build(spark, incremental_filter=delta_filter)
     merged = (
         stored.unionByName(delta)
@@ -161,7 +161,7 @@ def refresh_incremental(
     )
     merged_path = os.path.join(out_dir, f"{name}__merged")
     merged.write.mode("overwrite").parquet(merged_path)
-    return spark.read.parquet(merged_path)
+    return spark.read.schema(merged.schema).parquet(merged_path)
 
 
 def due_run(registry: ModelRegistry, as_of) -> list[tuple]:

@@ -19,8 +19,11 @@ from pyspark.sql import functions as F
 
 from uber_data_pipeline_spark.catalog import load_table
 from uber_data_pipeline_spark.sources.staging import (
+    artifact_dir,
     ensure_staged,
-    source_fingerprint,
+    file_identity,
+    sf_name,
+    spark_success,
 )
 from uber_data_pipeline_spark.sources.cdc import merge_latest, scd2_history
 from uber_data_pipeline_spark.streaming.events import (
@@ -46,10 +49,6 @@ _UPDATE_EVERY = 97
 _UPLIFT_SQL = (
     "CAST(CAST(o_totalprice AS DECIMAL(18,2)) * CAST(1.1 AS DECIMAL(3,2)) AS DOUBLE)"
 )
-
-_ARTIFACT_DIR = os.path.join(os.path.dirname(os.path.dirname(os.path.dirname(
-    os.path.abspath(__file__)))), ".artifacts")
-
 
 def _cdc_frames(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     """The deterministic CDC scenario: (base snapshot, delta batch)."""
@@ -238,22 +237,6 @@ def ivm_join_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _stage_flat_once(stage: str, params: dict, write_fn) -> None:
-    """Stage a flat-format landing directory once per (sf, params).
-
-    Delegates the marker+lock+fingerprint staleness contract to
-    sources.staging.ensure_staged (ADVICE r3: one copy of the logic),
-    adding only the flat-writer-specific postcondition: Spark's
-    _SUCCESS file must exist, because the marker proves we wrote
-    THESE columns while _SUCCESS proves the write itself finished."""
-    ensure_staged(
-        stage,
-        params,
-        write_fn,
-        valid_fn=lambda root: os.path.exists(os.path.join(root, "_SUCCESS")),
-    )
-
-
 def events_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CSV source-connector exercise as a query: stage the events
     fact to CSV once (the landing-file format half the world's ingest
@@ -269,14 +252,12 @@ def events_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side-combined groupBy."""
     from uber_data_pipeline_spark.sources.readers import read_csv
 
-    stage = os.path.join(
-        _ARTIFACT_DIR, "csv_stage", os.path.basename(sf_dir.rstrip("/"))
-    )
+    stage = artifact_dir("csv_stage", sf_dir)
     cols = ["event_id", "event_type", "value"]
-    _stage_flat_once(
+    ensure_staged(
         stage,
         {"table": "events", "columns": cols, "format": "csv",
-         "src": source_fingerprint(os.path.join(sf_dir, "events.parquet"))},
+         "src": file_identity(os.path.join(sf_dir, "events.parquet"))},
         lambda tgt: (
             load_table(spark, sf_dir, "events")
             .select(*cols)
@@ -284,6 +265,7 @@ def events_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             .option("header", "true")
             .csv(tgt)
         ),
+        valid_fn=spark_success,
     )
     back = read_csv(
         spark, stage, "event_id bigint, event_type string, value double"
@@ -314,14 +296,12 @@ def _format_roundtrip(
         read_xml,
     )
 
-    stage = os.path.join(
-        _ARTIFACT_DIR, f"{fmt}_stage", os.path.basename(sf_dir.rstrip("/"))
-    )
+    stage = artifact_dir(f"{fmt}_stage", sf_dir)
     cols = ["event_id", "event_type", "value"]
-    _stage_flat_once(
+    ensure_staged(
         stage,
         {"table": "events", "columns": cols, "format": fmt,
-         "src": source_fingerprint(os.path.join(sf_dir, "events.parquet"))},
+         "src": file_identity(os.path.join(sf_dir, "events.parquet"))},
         lambda tgt: (
             load_table(spark, sf_dir, "events")
             .select(*cols)
@@ -330,6 +310,7 @@ def _format_roundtrip(
             .format(fmt)
             .save(tgt)
         ),
+        valid_fn=spark_success,
     )
     schema = "event_id bigint, event_type string, value double"
     back = (
@@ -421,7 +402,7 @@ def pipeline_dag_run(spark: SparkSession, sf_dir: str) -> DataFrame:
     from uber_data_pipeline_spark.plans.dag import run_dag
     from uber_data_pipeline_spark.plans.uber_models import build_registry
 
-    out_dir = os.path.join(_ARTIFACT_DIR, "dag", os.path.basename(sf_dir.rstrip("/")))
+    out_dir = artifact_dir("dag", sf_dir)
     shutil.rmtree(out_dir, ignore_errors=True)
     results = run_dag(spark, build_registry(), sf_dir, out_dir)
     return spark.createDataFrame(
@@ -444,9 +425,7 @@ def pipeline_dag_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     from uber_data_pipeline_spark.plans.dag import refresh_incremental
     from uber_data_pipeline_spark.plans.uber_models import build_registry
 
-    out_dir = os.path.join(
-        _ARTIFACT_DIR, "dag_incr", os.path.basename(sf_dir.rstrip("/"))
-    )
+    out_dir = artifact_dir("dag_incr", sf_dir)
     shutil.rmtree(out_dir, ignore_errors=True)
     merged = refresh_incremental(
         spark,
@@ -504,9 +483,7 @@ def snapshot_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
-    root = os.path.join(
-        _ARTIFACT_DIR, "vacuum", os.path.basename(sf_dir.rstrip("/"))
-    )
+    root = artifact_dir("vacuum", sf_dir)
     shutil.rmtree(root, ignore_errors=True)
     for v, mode in ((0, "overwrite"), (1, "append"), (2, "overwrite"), (3, "append")):
         commit_snapshot(
@@ -673,9 +650,7 @@ def cdc_merge_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     base, delta = _cdc_frames(spark, sf_dir)
     part = (F.col("o_orderkey") % MERGE_SINK_PARTS).cast("int")
-    target = os.path.join(
-        _ARTIFACT_DIR, "merge_sink", os.path.basename(sf_dir.rstrip("/"))
-    )
+    target = artifact_dir("merge_sink", sf_dir)
     shutil.rmtree(target, ignore_errors=True)
     # cluster on the partition column: one file per partition dir
     # instead of one per (task, dir) — see merge_upsert_partitioned
@@ -706,8 +681,7 @@ def streaming_merge_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     one-shot relational merge, so this shares `cdc_incremental_merge`'s
     oracle."""
     base, delta = _cdc_frames(spark, sf_dir)
-    sf_name = os.path.basename(sf_dir.rstrip("/"))
-    root = os.path.join(_ARTIFACT_DIR, "stream_merge", sf_name)
+    root = artifact_dir("stream_merge", sf_dir)
     shutil.rmtree(root, ignore_errors=True)
     delta_dir = os.path.join(root, "delta")
     delta.repartition(4).write.mode("overwrite").parquet(delta_dir)
@@ -752,8 +726,7 @@ def streaming_merge_sink_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("o_orderkey", "o_orderstatus", "o_totalprice")
         .withColumn("version", F.lit(0).cast("int"))
     )
-    sf_name = os.path.basename(sf_dir.rstrip("/"))
-    root = os.path.join(_ARTIFACT_DIR, "rate_merge", sf_name)
+    root = artifact_dir("rate_merge", sf_dir)
     shutil.rmtree(root, ignore_errors=True)
     # churn-aligned layout (r13, guide §6): the feed can only ever
     # touch the key cohort o_orderkey % RATE_KEY_MOD < RATE_MOD, so
@@ -800,8 +773,7 @@ def compaction_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     the rewrite is a round-robin repartition."""
     from uber_data_pipeline_spark.sources.writers import compact_small_files
 
-    sf_name = os.path.basename(sf_dir.rstrip("/"))
-    root = os.path.join(_ARTIFACT_DIR, "compaction", sf_name)
+    root = artifact_dir("compaction", sf_dir)
     shutil.rmtree(root, ignore_errors=True)
     return compact_small_files(
         load_table(spark, sf_dir, "orders"),
@@ -829,60 +801,48 @@ def bucketed_join_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_bucketed,
     )
 
-    import json
-
-    sf_name = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
-    root = os.path.join(_ARTIFACT_DIR, "bucketed_q", sf_name)
+    tag = sf_name(sf_dir).replace(".", "_")
+    root = artifact_dir("bucketed_q", sf_dir)
     tables = (("orders", "o_orderkey"), ("lineitem", "l_orderkey"))
     # the bucketed-table contract in full: the clustering shuffle is
     # paid ONCE at write time; a fresh session re-attaches the files
     # (bucket ids live in the file names) instead of re-clustering.
-    # The sidecar fingerprint (source file size+mtime per table, plus
-    # the bucket count) guards the re-attach: regenerated testdata or
-    # a changed BUCKETED_N invalidates the WHOLE layout (written only
-    # after BOTH tables land, so a half-written pair can never mix
-    # dataset generations into one join).
-    def _fingerprint() -> dict:
-        fp = {"n_buckets": BUCKETED_N}
-        for tbl, _ in tables:
-            st = os.stat(os.path.join(sf_dir, f"{tbl}.parquet"))
-            fp[tbl] = [st.st_size, int(st.st_mtime)]
-        return fp
-
-    sidecar = os.path.join(root, "layout.json")
-    reuse = False
-    if os.path.exists(sidecar):
-        try:
-            with open(sidecar) as f:
-                reuse = json.load(f) == _fingerprint()
-        except (OSError, ValueError):
-            reuse = False
-    if reuse:
-        for tbl, key in tables:
-            reuse = reuse and register_bucketed_if_present(
-                spark,
-                f"{tbl}_bq_{sf_name}",
-                os.path.join(root, tbl),
-                BUCKETED_N,
-                [key],
-                load_table(spark, sf_dir, tbl).schema.toDDL(),
-                sort_cols=[key],
-            )
-    if not reuse:
-        shutil.rmtree(root, ignore_errors=True)
+    # One marker covers BOTH tables and the bucket count, so a changed
+    # source or BUCKETED_N rebuilds the whole layout and a half-written
+    # pair can never mix dataset generations into one join.
+    def _write(tgt: str) -> None:
         for tbl, key in tables:
             write_bucketed(
                 load_table(spark, sf_dir, tbl),
-                f"{tbl}_bq_{sf_name}",
-                os.path.join(root, tbl),
+                f"{tbl}_bq_{tag}",
+                os.path.join(tgt, tbl),
                 BUCKETED_N,
                 [key],
                 sort_cols=[key],
             )
-        with open(sidecar, "w") as f:
-            json.dump(_fingerprint(), f)
-    a = read_table(spark, f"orders_bq_{sf_name}")
-    b = read_table(spark, f"lineitem_bq_{sf_name}")
+
+    ensure_staged(
+        root,
+        {"n_buckets": BUCKETED_N,
+         "src": {tbl: file_identity(os.path.join(sf_dir, f"{tbl}.parquet"))
+                 for tbl, _ in tables}},
+        _write,
+        valid_fn=lambda tgt: all(
+            spark_success(os.path.join(tgt, tbl)) for tbl, _ in tables
+        ),
+    )
+    for tbl, key in tables:
+        register_bucketed_if_present(
+            spark,
+            f"{tbl}_bq_{tag}",
+            os.path.join(root, tbl),
+            BUCKETED_N,
+            [key],
+            load_table(spark, sf_dir, tbl).schema.toDDL(),
+            sort_cols=[key],
+        )
+    a = read_table(spark, f"orders_bq_{tag}")
+    b = read_table(spark, f"lineitem_bq_{tag}")
     return (
         a.join(b, a["o_orderkey"] == b["l_orderkey"])
         .groupBy("o_orderpriority")
@@ -916,9 +876,7 @@ def orders_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     orders = load_table(spark, sf_dir, "orders")
     cutoff = F.lit(CDC_CUTOFF).cast("timestamp_ntz")
-    root = os.path.join(
-        _ARTIFACT_DIR, "schema_evo", os.path.basename(sf_dir.rstrip("/"))
-    )
+    root = artifact_dir("schema_evo", sf_dir)
     shutil.rmtree(root, ignore_errors=True)
     v1 = orders.filter(F.col("o_orderdate") < cutoff).select(
         "o_orderkey", "o_totalprice"
@@ -939,72 +897,33 @@ def orders_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 
-import threading as _threading
-
-# serializes first-run staging: two registry entries share the
-# time-travel lake, and bench.py's concurrent pass may hit both
-# before either has staged — without the lock one thread rmtrees the
-# root while the other is mid-commit
-_STAGE_LOCK = _threading.Lock()
-
-
-def _stage_snapshots_once(
-    root: str, marker_params: dict, slices, commit_fn
-) -> None:
-    """Stage immutable snapshot commits once per (sf, params): a
-    marker JSON records the staging parameters; on match the staged
-    lake is REUSED (snapshot commits are immutable by contract, so
-    unlike the MERGE sinks there is nothing to rebuild), on mismatch,
-    absence, or an unreadable marker (crash mid-publish) the lake is
-    rebuilt from scratch. The marker itself publishes atomically
-    (tmp + rename, same as the snapshot manifests). Steady-state cost
-    of the snapshot entries drops from 3 write jobs to zero."""
-    import json as _json
-
-    marker = os.path.join(root, "_STAGED.json")
-    with _STAGE_LOCK:
-        if os.path.exists(marker):
-            try:
-                with open(marker) as fh:
-                    if _json.load(fh) == marker_params:
-                        return
-            except ValueError:
-                pass  # corrupt marker -> restage
-        shutil.rmtree(root, ignore_errors=True)
-        for i, (sl, mode) in enumerate(slices):
-            commit_fn(sl, root, i, mode=mode)
-        tmp = marker + ".tmp"
-        with open(tmp, "w") as fh:
-            _json.dump(marker_params, fh)
-        os.replace(tmp, marker)
-
-
 def _stage_time_travel_lake(spark: SparkSession, sf_dir: str) -> str:
     """Stage (once) the two-commit time-travel lake with o_orderkey
     stats recorded; shared by snapshot_time_travel and
     snapshot_skipping_read."""
-    import functools
-
     from uber_data_pipeline_spark.sources.snapshots import commit_snapshot
 
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice", "o_orderdate"
     )
     cutoff = F.lit(CDC_CUTOFF).cast("timestamp_ntz")
-    root = os.path.join(
-        _ARTIFACT_DIR, "snapshots", os.path.basename(sf_dir.rstrip("/"))
-    )
-    _stage_snapshots_once(
-        root,
+
+    def _commit(tgt: str) -> None:
+        commit_snapshot(
+            orders.filter(F.col("o_orderdate") < cutoff).repartition(4),
+            tgt, 0, mode="overwrite", stats_cols=["o_orderkey"],
+        )
+        commit_snapshot(
+            orders.filter(F.col("o_orderdate") >= cutoff).repartition(4),
+            tgt, 1, mode="append", stats_cols=["o_orderkey"],
+        )
+
+    return ensure_staged(
+        artifact_dir("snapshots", sf_dir),
         {"entry": "time_travel", "cutoff": CDC_CUTOFF, "stats": ["o_orderkey"], "v": 2,
-         "src": source_fingerprint(os.path.join(sf_dir, "orders.parquet"))},
-        [
-            (orders.filter(F.col("o_orderdate") < cutoff).repartition(4), "overwrite"),
-            (orders.filter(F.col("o_orderdate") >= cutoff).repartition(4), "append"),
-        ],
-        functools.partial(commit_snapshot, stats_cols=["o_orderkey"]),
+         "src": file_identity(os.path.join(sf_dir, "orders.parquet"))},
+        _commit,
     )
-    return root
 
 
 BRANCH_CUTOFF = "2001-01-01 00:00:00"
@@ -1016,8 +935,6 @@ def _stage_branch_lake(spark: SparkSession, sf_dir: str) -> str:
     then a branch commit v2 appends the late period to exp only — the
     two refs share v0's files (a branch is one tiny ref file, no data
     copied) and diverge after it."""
-    import json as _json
-
     from uber_data_pipeline_spark.sources.snapshots import (
         commit_snapshot,
         commit_to_branch,
@@ -1029,45 +946,30 @@ def _stage_branch_lake(spark: SparkSession, sf_dir: str) -> str:
     )
     c1 = F.lit(CDC_CUTOFF).cast("timestamp_ntz")
     c2 = F.lit(BRANCH_CUTOFF).cast("timestamp_ntz")
-    root = os.path.join(
-        _ARTIFACT_DIR, "branching", os.path.basename(sf_dir.rstrip("/"))
-    )
-    marker_params = {
-        "entry": "branch",
-        "cutoffs": [CDC_CUTOFF, BRANCH_CUTOFF],
-        "v": 3,
-        "src": source_fingerprint(os.path.join(sf_dir, "orders.parquet")),
-    }
-    marker = os.path.join(root, "_STAGED.json")
-    with _STAGE_LOCK:
-        if os.path.exists(marker):
-            try:
-                with open(marker) as fh:
-                    if _json.load(fh) == marker_params:
-                        return root
-            except ValueError:
-                pass  # corrupt marker -> restage
-        shutil.rmtree(root, ignore_errors=True)
+
+    def _commit(tgt: str) -> None:
         commit_snapshot(
             orders.filter(F.col("o_orderdate") < c1).repartition(4),
-            root, 0, mode="overwrite",
+            tgt, 0, mode="overwrite",
         )
         commit_snapshot(
             orders.filter(
                 (F.col("o_orderdate") >= c1) & (F.col("o_orderdate") < c2)
             ).repartition(4),
-            root, 1, mode="append",
+            tgt, 1, mode="append",
         )
-        create_branch(root, "exp", 0)
+        create_branch(tgt, "exp", 0)
         commit_to_branch(
             orders.filter(F.col("o_orderdate") >= c2).repartition(4),
-            root, "exp", 2, mode="append",
+            tgt, "exp", 2, mode="append",
         )
-        tmp = marker + ".tmp"
-        with open(tmp, "w") as fh:
-            _json.dump(marker_params, fh)
-        os.replace(tmp, marker)
-    return root
+
+    return ensure_staged(
+        artifact_dir("branching", sf_dir),
+        {"entry": "branch", "cutoffs": [CDC_CUTOFF, BRANCH_CUTOFF], "v": 3,
+         "src": file_identity(os.path.join(sf_dir, "orders.parquet"))},
+        _commit,
+    )
 
 
 def snapshot_branch(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1171,12 +1073,10 @@ def dq_quarantine_split(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("violated"),
     )
     quarantined = flagged.filter(F.size("violated") > 0)
-    root = os.path.join(
-        _ARTIFACT_DIR, "quarantine", os.path.basename(sf_dir.rstrip("/"))
-    )
+    root = artifact_dir("quarantine", sf_dir)
     shutil.rmtree(root, ignore_errors=True)
     quarantined.write.mode("overwrite").parquet(root)
-    qr = spark.read.parquet(root)
+    qr = spark.read.schema(quarantined.schema).parquet(root)
     # ONE conditional aggregate over the re-read quarantine (all
     # per-rule counts + the quarantined total share a single scan),
     # unpivoted with stack; total_passed is its own reduced aggregate
@@ -1229,24 +1129,22 @@ def snapshot_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey", "o_orderstatus", "o_totalprice", "o_orderdate"
     )
     cutoff = F.lit(CDC_CUTOFF).cast("timestamp_ntz")
-    root = os.path.join(
-        _ARTIFACT_DIR, "pyds_snapshots", os.path.basename(sf_dir.rstrip("/"))
-    )
-    _stage_snapshots_once(
-        root,
+
+    def _commit(tgt: str) -> None:
+        commit_snapshot(
+            orders.filter(F.col("o_orderdate") < cutoff).drop("o_orderdate"),
+            tgt, 0, mode="overwrite",
+        )
+        commit_snapshot(
+            orders.filter(F.col("o_orderdate") >= cutoff).drop("o_orderdate"),
+            tgt, 1, mode="append",
+        )
+
+    root = ensure_staged(
+        artifact_dir("pyds_snapshots", sf_dir),
         {"entry": "pyds_batch", "cutoff": CDC_CUTOFF, "v": 1,
-         "src": source_fingerprint(os.path.join(sf_dir, "orders.parquet"))},
-        [
-            (
-                orders.filter(F.col("o_orderdate") < cutoff).drop("o_orderdate"),
-                "overwrite",
-            ),
-            (
-                orders.filter(F.col("o_orderdate") >= cutoff).drop("o_orderdate"),
-                "append",
-            ),
-        ],
-        commit_snapshot,
+         "src": file_identity(os.path.join(sf_dir, "orders.parquet"))},
+        _commit,
     )
     pyds.register(spark)
     from uber_data_pipeline_spark.functions.numeric import dsum
@@ -1291,31 +1189,28 @@ def snapshot_stream_python_datasource(
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice", "o_orderdate"
     )
-    root = os.path.join(
-        _ARTIFACT_DIR, "pyds_stream", os.path.basename(sf_dir.rstrip("/"))
-    )
+    root = artifact_dir("pyds_stream", sf_dir)
     lo = F.lit(PYDS_STREAM_FROM).cast("timestamp_ntz")
     cut1 = F.lit("2001-03-01").cast("timestamp_ntz")
     cut2 = F.lit("2001-05-01").cast("timestamp_ntz")
     tail = orders.filter(F.col("o_orderdate") >= lo)
     # commits are immutable -> staged once; the CHECKPOINT is per-run
     # (a reused checkpoint would see no new commits and emit nothing)
-    commits_root = os.path.join(root, "commits")
-    _stage_snapshots_once(
-        commits_root,
+    slices = [
+        tail.filter(F.col("o_orderdate") < cut1),
+        tail.filter((F.col("o_orderdate") >= cut1) & (F.col("o_orderdate") < cut2)),
+        tail.filter(F.col("o_orderdate") >= cut2),
+    ]
+
+    def _commit(tgt: str) -> None:
+        for v, sl in enumerate(slices):
+            commit_snapshot(sl.drop("o_orderdate"), tgt, v, mode="append")
+
+    commits_root = ensure_staged(
+        os.path.join(root, "commits"),
         {"entry": "pyds_stream", "cuts": [PYDS_STREAM_FROM, "2001-03-01", "2001-05-01"], "v": 2,
-         "src": source_fingerprint(os.path.join(sf_dir, "orders.parquet"))},
-        [
-            (tail.filter(F.col("o_orderdate") < cut1).drop("o_orderdate"), "append"),
-            (
-                tail.filter(
-                    (F.col("o_orderdate") >= cut1) & (F.col("o_orderdate") < cut2)
-                ).drop("o_orderdate"),
-                "append",
-            ),
-            (tail.filter(F.col("o_orderdate") >= cut2).drop("o_orderdate"), "append"),
-        ],
-        commit_snapshot,
+         "src": file_identity(os.path.join(sf_dir, "orders.parquet"))},
+        _commit,
     )
     checkpoint = os.path.join(root, "checkpoint")
     shutil.rmtree(checkpoint, ignore_errors=True)
@@ -1325,7 +1220,7 @@ def snapshot_stream_python_datasource(
         .option("root", commits_root)
         .load()
     )
-    name = f"pyds_stream_sink_{os.path.basename(sf_dir.rstrip('/')).replace('.', '_')}"
+    name = f"pyds_stream_sink_{sf_name(sf_dir).replace('.', '_')}"
     q = (
         st.writeStream.format("memory")
         .queryName(name)
@@ -1372,9 +1267,7 @@ def orders_observed_load(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_null_status"
         ),
     )
-    target = os.path.join(
-        _ARTIFACT_DIR, "observed_load", os.path.basename(sf_dir.rstrip("/"))
-    )
+    target = artifact_dir("observed_load", sf_dir)
     _shutil.rmtree(target, ignore_errors=True)
     observed.write.mode("overwrite").parquet(target)
     m = obs.get

@@ -45,15 +45,10 @@ def orders_range_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Physical range-partitioned time-series layout + footer audit
     (operators/layout.range_layout_audit): real parquet files, real
     min/max envelopes, non-overlap verified from metadata only."""
-    import os
+    from uber_data_pipeline_spark.sources.staging import artifact_dir
 
-    target = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(
-            os.path.abspath(__file__)))),
-        ".artifacts", "range_layout", os.path.basename(sf_dir.rstrip("/")),
-    )
     return layout.range_layout_audit(
-        load_table(spark, sf_dir, "orders"), target
+        load_table(spark, sf_dir, "orders"), artifact_dir("range_layout", sf_dir)
     )
 
 

@@ -142,29 +142,24 @@ def _media_lake(spark: SparkSession, sf_dir: str) -> DataFrame:
     prove nothing about scan cost."""
     import os
 
+    from uber_data_pipeline_spark.sources.readers import read_parquet_inferred
     from uber_data_pipeline_spark.sources.staging import (
+        artifact_dir,
         ensure_staged,
-        source_fingerprint,
+        file_identity,
     )
 
-    root = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(
-            os.path.abspath(__file__)))),
-        ".artifacts", "media_lake", os.path.basename(sf_dir.rstrip("/")),
-    )
-    ensure_staged(
-        root,
+    root = ensure_staged(
+        artifact_dir("media_lake", sf_dir),
         {
             "what": "media_lake",
-            "src": source_fingerprint(
-                os.path.join(sf_dir, "documents.parquet")
-            ),
+            "src": file_identity(os.path.join(sf_dir, "documents.parquet")),
         },
         lambda tgt: multimodal.attach_media(_docs(spark, sf_dir))
         .write.mode("overwrite")
         .parquet(tgt),
     )
-    return spark.read.parquet(root)
+    return read_parquet_inferred(spark, root)
 
 
 
@@ -173,28 +168,22 @@ def _media_lake(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _lsh_index_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Build-once/probe-many: write the minhash index to parquet (per
-    SF, bound to the source fingerprint via ensure_staged) and
+    SF, bound to the source file identity via ensure_staged) and
     generate candidates from the STORED index — must equal the
     from-raw-text LSH path, so it shares that oracle."""
     import os
 
     from uber_data_pipeline_spark.sources.staging import (
+        artifact_dir,
         ensure_staged,
-        source_fingerprint,
+        file_identity,
     )
 
-    root = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(
-            os.path.abspath(__file__)))),
-        ".artifacts", "lsh_index", os.path.basename(sf_dir.rstrip("/")),
-    )
-    ensure_staged(
-        root,
+    root = ensure_staged(
+        artifact_dir("lsh_index", sf_dir),
         {
             "what": "lsh_index",
-            "src": source_fingerprint(
-                os.path.join(sf_dir, "documents.parquet")
-            ),
+            "src": file_identity(os.path.join(sf_dir, "documents.parquet")),
         },
         lambda tgt: dedup.write_lsh_index(_docs(spark, sf_dir), tgt),
     )
@@ -216,25 +205,19 @@ def _lsh_incremental_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     from uber_data_pipeline_spark.sources.staging import (
+        artifact_dir,
         ensure_staged,
-        source_fingerprint,
+        file_identity,
     )
 
     base = _docs(spark, sf_dir).filter(f"doc_id % {DELTA_MOD} != 0")
     delta = _docs(spark, sf_dir).filter(f"doc_id % {DELTA_MOD} = 0")
-    root = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(
-            os.path.abspath(__file__)))),
-        ".artifacts", "lsh_index_base", os.path.basename(sf_dir.rstrip("/")),
-    )
-    ensure_staged(
-        root,
+    root = ensure_staged(
+        artifact_dir("lsh_index_base", sf_dir),
         {
             "what": "lsh_index_base",
             "delta_mod": DELTA_MOD,
-            "src": source_fingerprint(
-                os.path.join(sf_dir, "documents.parquet")
-            ),
+            "src": file_identity(os.path.join(sf_dir, "documents.parquet")),
         },
         lambda tgt: dedup.write_lsh_index(base, tgt),
     )

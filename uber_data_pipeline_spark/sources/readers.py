@@ -17,11 +17,11 @@ once per file identity:
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from uber_data_pipeline_spark.sources.staging import file_identity
 
 # Pinned source schemas as DDL strings (the "declared catalog") —
 # kept as strings so importing this module needs no live session;
@@ -81,25 +81,7 @@ def normalize_events(df: DataFrame) -> DataFrame:
 # path -> (file identity, StructType Spark inferred from those files).
 # Process-level and shared by every session: it holds only the Python
 # StructType, never a DataFrame or a JVM handle, and one entry per path.
-_INFERRED: dict[str, tuple[tuple, T.StructType]] = {}
-
-
-def _file_identity(path: str) -> tuple:
-    """``(size, mtime_ns)`` of a single file; for a directory, the
-    sorted ``(relative path, size, mtime_ns)`` listing of the parquet
-    files under it (hidden ``_``/``.`` entries skipped, as Spark does)."""
-    if not os.path.isdir(path):
-        st = os.stat(path)
-        return (st.st_size, st.st_mtime_ns)
-    listing = []
-    for root, dirs, files in os.walk(path, followlinks=True):
-        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
-        for f in files:
-            if f.endswith(".parquet") and not f.startswith(("_", ".")):
-                full = os.path.join(root, f)
-                st = os.stat(full)
-                listing.append((os.path.relpath(full, path), st.st_size, st.st_mtime_ns))
-    return tuple(sorted(listing))
+_INFERRED: dict[str, tuple[list, T.StructType]] = {}
 
 
 def read_parquet_inferred(spark: SparkSession, path: str) -> DataFrame:
@@ -107,14 +89,14 @@ def read_parquet_inferred(spark: SparkSession, path: str) -> DataFrame:
     when the files have not changed since the last inference.
 
     The cache key is the path; the entry holds the path's file identity
-    (see :func:`_file_identity`) and the schema Spark inferred from
-    those files. A hit — same identity — reads with that schema and
-    runs no Spark job. A miss, or a changed identity (a rewritten file,
+    (``staging.file_identity``, the one staging uses) and the schema
+    Spark inferred from those files. A hit — same identity — reads with
+    that schema and runs no Spark job. A miss, or a changed identity (a rewritten file,
     an added or replaced part file), infers again and replaces the
     entry, so a rewritten table is read with its new schema. The
     identity is taken before the read, so a rewrite racing an
     inference can cost one more inference, never a stale schema."""
-    ident = _file_identity(path)
+    ident = file_identity(path)
     hit = _INFERRED.get(path)
     if hit is not None and hit[0] == ident:
         return spark.read.schema(hit[1]).parquet(path)

@@ -223,14 +223,8 @@ def compact_small_files(
     import os
 
     spark = df.sparkSession
-    if not os.path.isdir(fragmented_path) or not any(
-        f.endswith(".parquet") for f in os.listdir(fragmented_path)
-    ):
-        df.repartition(fragment_files).write.mode("overwrite").parquet(
-            fragmented_path
-        )
-
-    frag = spark.read.parquet(fragmented_path)
+    df.repartition(fragment_files).write.mode("overwrite").parquet(fragmented_path)
+    frag = spark.read.schema(df.schema).parquet(fragmented_path)
     n_rows = frag.count()
     n_out = max(1, math.ceil(n_rows / target_rows_per_file))
     frag.repartition(n_out).write.mode("overwrite").parquet(compacted_path)

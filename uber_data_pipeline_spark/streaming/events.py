@@ -28,6 +28,11 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from uber_data_pipeline_spark.functions.numeric import dsum
 from uber_data_pipeline_spark.session import scoped_session
 from uber_data_pipeline_spark.sources.cdc import read_stream_events
+from uber_data_pipeline_spark.sources.staging import (
+    artifact_dir,
+    ensure_staged,
+    file_identity,
+)
 
 SESSION_GAP_SECONDS = 1800
 _sink_ids = itertools.count()
@@ -39,44 +44,27 @@ _sink_ids = itertools.count()
 # A memory sink's view lives in the child; runners return it through
 # the child's catalog.
 
-_ARTIFACTS = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-    ".artifacts",
-)
-
-
 def events_landing_dir(sf_dir: str) -> str:
     """The file stream source needs a DIRECTORY (its basePath); stage
     the events parquet into a landing dir via hardlink (fallback:
     copy). In production this is simply the ingest landing path new
-    files arrive in."""
-    dst_dir = os.path.join(_ARTIFACTS, "stream_landing", os.path.basename(sf_dir.rstrip("/")))
-    os.makedirs(dst_dir, exist_ok=True)
+    files arrive in. The stage is bound to the source's file identity,
+    so a replaced source (a regenerated SF: new inode, even at equal
+    size and mtime) is relinked instead of streaming the dead inode."""
     src = os.path.join(sf_dir, "events.parquet")
-    dst = os.path.join(dst_dir, "events.parquet")
-    # staleness guard, not just existence: if the SOURCE parquet was
-    # replaced since staging (a regenerated derived SF; a refreshed
-    # lake), the old hardlink still resolves to the dead inode and an
-    # existence check would silently stream stale data. samefile
-    # covers the hardlink path; size+mtime covers the copy fallback.
-    if os.path.exists(dst):
-        try:
-            same = os.path.samefile(src, dst)
-        except OSError:
-            same = False
-        if not same:
-            s, d = os.stat(src), os.stat(dst)
-            same = (s.st_size, s.st_mtime_ns) == (d.st_size, d.st_mtime_ns)
-        if not same:
-            os.remove(dst)
-    if not os.path.exists(dst):
+
+    def _link(tgt: str) -> None:
+        dst = os.path.join(tgt, "events.parquet")
         try:
             os.link(src, dst)
         except OSError:
-            shutil.copyfile(src, dst)
-            st = os.stat(src)
-            os.utime(dst, ns=(st.st_atime_ns, st.st_mtime_ns))
-    return dst_dir
+            shutil.copy2(src, dst)
+
+    return ensure_staged(
+        artifact_dir("stream_landing", sf_dir),
+        {"what": "stream_landing", "src": file_identity(src)},
+        _link,
+    )
 
 
 # shuffle.partitions at a stateful query's start becomes its STATE
@@ -670,9 +658,7 @@ def late_data_audit_stream(
     """
     from uber_data_pipeline_spark.catalog import load_table
 
-    root = os.path.join(
-        _ARTIFACTS, "late_audit", os.path.basename(sf_dir.rstrip("/"))
-    )
+    root = artifact_dir("late_audit", sf_dir)
     shutil.rmtree(root, ignore_errors=True)
     landing = os.path.join(root, "landing")
     os.makedirs(landing, exist_ok=True)
@@ -766,9 +752,7 @@ def state_store_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     what the oracle recomputes relationally. Key/value structs come
     back in the store's internal layout (key.window.start,
     value.count); the projection below is the stable public face."""
-    root = os.path.join(
-        _ARTIFACTS, "state_read", os.path.basename(sf_dir.rstrip("/"))
-    )
+    root = artifact_dir("state_read", sf_dir)
     shutil.rmtree(root, ignore_errors=True)
     ev = read_stream_events(
         scoped_session(spark, _STATE_CONF), events_landing_dir(sf_dir)
