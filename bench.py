@@ -20,6 +20,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from uber_data_pipeline_spark.harness import (  # noqa: E402
     clear_all,
+    compile_counters,
     compile_warmup,
     timed_noop_run,
 )
@@ -143,9 +144,11 @@ def main() -> int:
         )
         q.awaitTermination()
 
-    # compile warm-up pass: run EVERY registered query once at the
-    # smallest SF before timing, so the janino compile bill does not
-    # land on whichever queries the rotation happens to put first
+    # warm-up pass: run EVERY registered query once at the smallest SF
+    # before timing, so class loading, JIT warm-up and first-touch
+    # staging are not billed to whichever queries come first. The
+    # registry's generated classes (thousands) do not fit the 256-entry
+    # codegen cache, so the timed pass still compiles its own classes
     compile_warmup(spark, entrymod.queries().values(), sf_dir)
 
     # staging warm-up pass: several entries build a source-bound
@@ -238,11 +241,19 @@ def main() -> int:
     # between reps: operators cache intermediates (shingle sets,
     # edge lists) for their own multi-pass plans; drop them so no
     # query's timing rides on or pays for another query's leftovers.
+    # per entry, over all its reps: classes Janino compiled and JIT
+    # compile ms (process-wide counters, so only the sequential pass)
+    codegen_compiles: dict[str, int] = {}
+    jit_ms: dict[str, int] = {}
     load_before = _load_stamp()
     for name, fn in entrymod.queries().items():
+        compiles0, jit0 = compile_counters(spark)
         best, reps, rows = timed_noop_run(
             spark, fn, sf_dir, clear_all, REP_THRESHOLD_S
         )
+        compiles1, jit1 = compile_counters(spark)
+        codegen_compiles[name] = compiles1 - compiles0
+        jit_ms[name] = jit1 - jit0
         row_counts[name] = rows
         timings[name] = best
         n_reps[name] = len(reps)
@@ -431,6 +442,8 @@ def main() -> int:
                     n: round(statistics.median(r), 3)
                     for n, r in all_reps.items()
                 },
+                "codegen_compiles": codegen_compiles,
+                "jit_ms": jit_ms,
                 "sf": sf_val,
                 "estimator": "min (since r12; medians field for pre-r12 comparability)",
                 "load_before": load_before,

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import os
 import shutil
+import statistics
 
 import pytest
 
@@ -103,12 +104,10 @@ def test_run_dag_counts_rows_from_the_written_footers(spark, tmp_path, monkeypat
     assert {r.model: r.n_rows for r in built}["no_rows"] == 0
 
 
-def test_elt_days_add_no_bus_listener(spark, tmp_path):
-    """Three elt days (merge_sink_stream, then run_dag over the lake)
-    on one session leave the SparkContext's listener bus with the
-    number of listeners it had after the first day: nothing on the
-    per-day path registers a listener (an Observation or a
-    QueryExecutionListener would, once per day)."""
+def _elt_day_runner(spark, tmp_path):
+    """``day(d)``: one elt day on a tmp lake over SF_DIR's orders —
+    land 10 changed keys, merge_sink_stream them into the partitioned
+    lake, then run_dag over it."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -125,9 +124,8 @@ def test_elt_days_add_no_bus_listener(spark, tmp_path):
     pq.write_table(orders, base_path)
     base = spark.read.parquet(base_path)
     ddl = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in base.schema.fields)
-    bus = spark.sparkContext._jsc.sc().listenerBus()
 
-    def day(d: int) -> int:
+    def day(d: int) -> None:
         keys = orders.slice(d * 10, 10)
         pq.write_table(
             keys.set_column(keys.schema.get_field_index("version"), "version",
@@ -140,11 +138,97 @@ def test_elt_days_add_no_bus_listener(spark, tmp_path):
             "CAST(year(o_orderdate) AS INT)", part_col="o_year",
         )
         run_dag(spark, build_registry(), str(lake_sf), str(tmp_path / f"d{d}"))
+
+    return day
+
+
+def test_elt_days_add_no_bus_listener(spark, tmp_path):
+    """Three elt days (merge_sink_stream, then run_dag over the lake)
+    on one session leave the SparkContext's listener bus with the
+    number of listeners it had after the first day: nothing on the
+    per-day path registers a listener (an Observation or a
+    QueryExecutionListener would, once per day)."""
+    day = _elt_day_runner(spark, tmp_path)
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+
+    def listeners(d: int) -> int:
+        day(d)
         bus.waitUntilEmpty(10_000)
         return bus.listeners().size()
 
-    counts = [day(d) for d in (1, 2, 3)]
+    counts = [listeners(d) for d in (1, 2, 3)]
     assert counts == [counts[0]] * 3, counts
+
+
+def _live_sessions_and_heap(spark) -> tuple[int, float]:
+    """(live classic SparkSession instances, live heap MiB) in the
+    driver JVM, from a class histogram (which runs a full GC first).
+    Read until two readings agree on the session count, so a stream
+    thread still exiting with its clone as its active session is not
+    counted."""
+    import gc
+    import re
+    import subprocess
+    import time
+
+    jcmd = shutil.which("jcmd")
+    if jcmd is None:
+        pytest.skip("jcmd (JDK) not on PATH")
+    pid = str(spark._jvm.java.lang.ProcessHandle.current().pid())
+    last = None
+    for _ in range(5):
+        gc.collect()
+        out = subprocess.run(
+            [jcmd, pid, "GC.class_histogram"],
+            capture_output=True, text=True, check=True, timeout=120,
+        ).stdout
+        sessions = sum(
+            int(m.group(1))
+            for m in re.finditer(
+                r"^\s*\d+:\s+(\d+)\s+\d+\s+org\.apache\.spark\.sql\.classic\.SparkSession\s*$",
+                out, re.M,
+            )
+        )
+        heap = int(re.search(r"^Total\s+\d+\s+(\d+)", out, re.M).group(1)) / 2**20
+        if last is not None and last[0] == sessions:
+            break
+        last = (sessions, heap)
+        time.sleep(0.5)
+    return sessions, heap
+
+
+def test_elt_days_hold_no_session_per_day(spark, tmp_path):
+    """Five elt days leave the JVM with as many live SparkSessions as
+    the first day did, and the live heap grows by less than 2.2 MiB per
+    day (least-squares slope over the five days). Before the merge ran
+    on the caller's session, every day's streaming clone stayed
+    reachable — inherited as the active session by the exchange pool
+    threads its merge started — one more session per day, and the live
+    heap grew ~2.9 MiB per day."""
+    day = _elt_day_runner(spark, tmp_path)
+    readings = []
+    for d in range(1, 6):
+        day(d)
+        readings.append(_live_sessions_and_heap(spark))
+    sessions = [s for s, _ in readings]
+    assert sessions == [sessions[0]] * len(sessions), readings
+    heap = [h for _, h in readings]
+    assert statistics.linear_regression(range(len(heap)), heap).slope < 2.2, readings
+
+
+def test_warm_elt_days_compile_no_class(spark, tmp_path):
+    """Once one elt day has run, the next two compile no generated
+    class: the codegen cache (session.CODEGEN_CACHE_ENTRIES) holds a
+    day's ~135 classes, where Spark's default of 100 recompiled 100+
+    per day."""
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    day = _elt_day_runner(spark, tmp_path)
+    compiles = []
+    for d in (1, 2, 3):
+        before = codegen.METRIC_COMPILATION_TIME().getCount()
+        day(d)
+        compiles.append(codegen.METRIC_COMPILATION_TIME().getCount() - before)
+    assert compiles[1:] == [0, 0], compiles
 
 
 def test_cron_next_fire_semantics():

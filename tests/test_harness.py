@@ -11,6 +11,7 @@ import pytest
 from uber_data_pipeline_spark.harness import (
     DEFAULT_WARM_DIR,
     clear_all,
+    compile_counters,
     compile_warmup,
     warm_dir,
 )
@@ -65,6 +66,24 @@ def test_compile_warmup_runs_past_a_raising_entry(spark, tmp_path):
     compile_warmup(spark, [boom, cached, checkpointed], str(tmp_path / "sf1.0"))
     assert seen == ["boom", DEFAULT_WARM_DIR, DEFAULT_WARM_DIR]
     assert not _persistent_ids(spark) - before
+
+
+def test_compile_counters_count_a_new_class_once(spark):
+    """A plan with a never-seen inlined literal compiles at least one
+    class; the same plan again is served from the codegen cache."""
+    import uuid
+
+    literal = uuid.uuid4().int % 2**31
+
+    def run() -> int:
+        c0, j0 = compile_counters(spark)
+        spark.range(10).selectExpr(f"id * {literal} AS x").filter(f"x <> {literal}").collect()
+        c1, j1 = compile_counters(spark)
+        assert j1 >= j0
+        return c1 - c0
+
+    assert run() >= 1
+    assert run() == 0
 
 
 def test_warm_dir_is_the_sibling_sf0001_else_the_default(tmp_path):

@@ -88,3 +88,11 @@ def test_concurrent_entries_leave_session_conf_and_results_unchanged(spark):
     drifted = [s for s in samples if s != snapshot]
     assert not drifted, f"session conf moved: {drifted[0]} != {snapshot}"
     assert concurrent == sequential
+
+
+def test_session_sizes_the_codegen_cache(spark):
+    """get_spark sizes Spark's codegen cache to the engine's constant
+    (a static conf: set in the builder, before the context starts)."""
+    from uber_data_pipeline_spark.session import CODEGEN_CACHE_ENTRIES
+
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == str(CODEGEN_CACHE_ENTRIES)

@@ -1,6 +1,6 @@
 """Measurement harness shared by bench.py, tools/ and tests/: clearing a
-session between entries, the compile warm-up, the timed noop-sink
-run, the DuckDB oracle views and the commit stamp."""
+session between entries, the warm-up pass, the compile counters, the
+timed noop-sink run, the DuckDB oracle views and the commit stamp."""
 
 from __future__ import annotations
 
@@ -38,12 +38,18 @@ def warm_dir(sf_dir: str) -> str:
 
 def compile_warmup(spark, fns, sf_dir: str) -> None:
     """Run every ``fn(spark, dir)`` once at the smallest SF before
-    timing. Whole-stage codegen compiles per generated stage source
-    (janino) on first execution — ~1-10 s for the widest plans — and
-    the cache is keyed by source text, so the tiny-SF run compiles
-    exactly the classes the timed run at ``sf_dir`` reuses (r2: 12 s of
-    the front entry's 14 s was compile, measured 1.4 s warm). An entry
-    that raises is skipped; the session is cleared after each."""
+    timing, so one-time process costs are not billed to whichever
+    entries are timed first: class loading for each operator path, JIT
+    warm-up of Spark's and Janino's own code, and staging work done on
+    first touch (r2: 12 s of the front entry's 14 s was such cost,
+    measured 1.4 s warm). It does not leave the timed run's generated
+    classes compiled: Spark's codegen cache is an LRU of
+    ``session.CODEGEN_CACHE_ENTRIES`` (256) classes keyed by source
+    text, and the whole registry generates thousands, so a
+    full-registry run recompiles nearly every class it times (bench.py
+    at sf0.001: 4,333 compiles in the timed pass); only a warm-up of a
+    few named entries (the rebench and profile tools) still fits. An
+    entry that raises is skipped; the session is cleared after each."""
     d = warm_dir(sf_dir)
     for fn in fns:
         try:
@@ -51,6 +57,19 @@ def compile_warmup(spark, fns, sf_dir: str) -> None:
         except Exception:  # noqa: BLE001 — warm-up must never kill a sweep
             pass
         clear_all(spark)
+
+
+def compile_counters(spark) -> tuple[int, int]:
+    """(classes Janino has compiled for Spark's generated code, ms the
+    JVM's JIT compilers have spent) in this process so far. Both are
+    process-wide, so a delta around one sequential run is that run's;
+    the JIT compiles in the background, so its delta also holds work
+    queued just before the run."""
+    jvm = spark._jvm
+    return (
+        jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME().getCount(),
+        jvm.java.lang.management.ManagementFactory.getCompilationMXBean().getTotalCompilationTime(),
+    )
 
 
 def timed_noop_run(spark, fn, sf_dir, clear_all, threshold_s: float = 0.3):

@@ -23,6 +23,16 @@ EXCLUDED_OPTIMIZER_RULES = (
     "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate"
 )
 
+# Spark's codegen cache (LRU, keyed by generated source, default 100
+# entries) must hold the classes of the plans the engine re-runs, or
+# every rerun pays a Janino compile and the JIT work on the new class
+# again. A warm elt_daily day (merge + 8-model DAG) runs ~135 distinct
+# classes, so at 100 it recompiled all of them every day; 256 is the
+# smallest power of two that holds them. A static conf: it takes
+# effect only when the context starts, so a caller-owned session
+# keeps Spark's 100.
+CODEGEN_CACHE_ENTRIES = 256
+
 
 def tune_runtime(spark: SparkSession) -> SparkSession:
     """Runtime (SQLConf-level) tuning that must hold even when the
@@ -115,6 +125,7 @@ def get_spark(
         )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.optimizer.excludedRules", EXCLUDED_OPTIMIZER_RULES)
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         # FIFO beat per-thread-pool FAIR on both cells (SCHED_AB.md):
         # 156.0 s sequential / 30.0 s concurrent-8 vs 162.5 s / 70.7 s.
         .config("spark.scheduler.mode", "FIFO")

@@ -355,7 +355,12 @@ def merge_sink_stream(
     (see merge_upsert_partitioned) plus one shuffle of the change rows
     by key; state is only the file-source log. Returns the final
     merged table, read with the schema it was written with (``base``
-    plus ``part_col``), so returning it runs no schema-inference job."""
+    plus ``part_col``), so returning it runs no schema-inference job.
+
+    Session: the batch's rows are re-homed onto ``spark`` and merged
+    there, so a run leaves no reference to the stream's cloned session
+    behind, and the merge plans with ``spark``'s conf (AQE on; the
+    stream's clone turns AQE off)."""
     from pyspark.sql import Window
 
     from uber_data_pipeline_spark.sources.writers import merge_upsert_partitioned
@@ -380,13 +385,22 @@ def merge_sink_stream(
     by_key = Window.partitionBy(*key_cols)
 
     def apply_batch(bdf: DataFrame, batch_id: int) -> None:
+        # merge on the caller's session, not on the stream's clone
+        # (bdf.sparkSession): each exchange Spark starts spawns a pool
+        # thread that inherits the running query's session as its
+        # active one and outlives the run, so a merge on the clone kept
+        # every day's clone (one SparkSession, ~1.4 MiB) reachable
+        rows = DataFrame(
+            spark._jsparkSession.createDataFrame(bdf._jdf.rdd(), bdf._jdf.schema()),
+            spark,
+        )
         newest = (
-            bdf.withColumn("_newest_file", F.max("_src_file").over(by_key))
+            rows.withColumn("_newest_file", F.max("_src_file").over(by_key))
             .filter(F.col("_src_file") == F.col("_newest_file"))
             .drop("_src_file", "_newest_file")
         )
         merge_upsert_partitioned(
-            bdf.sparkSession,
+            spark,
             target_path,
             newest.withColumn(part_col, F.expr(part_expr)),
             key_cols,
