@@ -4,10 +4,13 @@ all-models gate, /root/reference/Diary of Making.md §5)."""
 
 from __future__ import annotations
 
+import builtins
+
 import pytest
 
 import __spark_entry__ as entrymod
 from tests.conftest import SF_DIR
+from uber_data_pipeline_spark import queries as registry
 from uber_data_pipeline_spark.harness import clear_all
 from uber_data_pipeline_spark.testing import compare
 
@@ -23,6 +26,40 @@ def test_every_query_has_callable():
 
 def test_oracle_keys_subset_of_queries():
     assert set(ORACLES) <= set(QUERIES)
+
+
+def test_queries_in_module_then_insertion_order(monkeypatch):
+    """The registry order is read from the code alone: no run record
+    (bench_detail.json, CORRECTNESS_*.json) is opened to build it."""
+    opened = []
+    real_open = builtins.open
+
+    def spy(file, *args, **kwargs):
+        opened.append(str(file))
+        return real_open(file, *args, **kwargs)
+
+    monkeypatch.setattr(builtins, "open", spy)
+    names = list(registry.all_queries())
+    oracles = list(registry.all_oracles())
+    monkeypatch.undo()
+    assert [p for p in opened if p.endswith(".json")] == []
+    assert names == [n for mod in registry._modules() for n in mod.QUERIES]
+    assert list(QUERIES) == names and list(ORACLES) == oracles
+
+
+def test_query_and_oracle_orders_agree():
+    pos = {n: i for i, n in enumerate(QUERIES)}
+    o = list(ORACLES)
+    assert o == sorted(o, key=lambda n: pos[n])
+
+
+def test_duplicate_entry_name_is_rejected(monkeypatch):
+    from uber_data_pipeline_spark.queries import scale, uber
+
+    name = next(iter(uber.QUERIES))
+    monkeypatch.setitem(scale.QUERIES, name, uber.QUERIES[name])
+    with pytest.raises(ValueError, match=rf"{name}.*queries\.uber.*queries\.scale"):
+        registry.all_queries()
 
 
 @pytest.mark.parametrize("name", sorted(QUERIES))

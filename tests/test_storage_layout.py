@@ -192,6 +192,30 @@ def test_merge_sweeps_swap_aside_left_by_a_crash(spark):
     shutil.rmtree(path, ignore_errors=True)
 
 
+def test_cdc_merge_sink_reads_back_without_a_job(spark, monkeypatch):
+    """`cdc_merge_sink` re-reads its merged lake with the schema it
+    wrote, so building the result after the merge runs no Spark job
+    (inferring the schema from the footers runs one)."""
+    from uber_data_pipeline_spark.queries.pipeline import cdc_merge_sink
+    from uber_data_pipeline_spark.sources import writers
+
+    sc = spark.sparkContext
+    group = "cdc-merge-sink-read-back"
+    merge = writers.merge_upsert_partitioned
+
+    def merge_then_count(*args, **kwargs):
+        merge(*args, **kwargs)
+        sc.setJobGroup(group, group)
+
+    monkeypatch.setattr(writers, "merge_upsert_partitioned", merge_then_count)
+    try:
+        cdc_merge_sink(spark, SF_DIR)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 0
+
+
 def test_bucketed_layout_restages_on_a_same_second_rewrite(spark, tmp_path, monkeypatch):
     """The staged bucketed layout is bound to its sources' full
     mtime_ns: an orders.parquet rewrite inside the same whole second

@@ -1,7 +1,7 @@
 """Incremental large-SF oracle gate.
 
 CORRECTNESS_sf1_partial.json stopped at 51/172 because it swept in
-registry (rotation) order, which front-loads the heavy tail — the
+registry order, which front-loaded the heavy tail — the
 DuckDB-side shingle/minhash recomputes burned the whole budget before
 the cheap entries ran. This runner makes the sweep resumable and
 cheap-first:

@@ -3,23 +3,14 @@
 Each submodule exports QUERIES (name -> fn(spark, sf_dir) -> DataFrame)
 and ORACLES (name -> DuckDB SQL string, omitted for non-SQL ops).
 
-Registry ORDER is a coverage rotation: the round driver verifies a
-bounded prefix of `queries()` against the DuckDB oracle (r1 stopped at
-the first 50 of 108 keys), so we order entries by how long ago the
-driver last hash-verified them — never-verified entries first, then
-oldest-green first. The verification history is read from the
-CORRECTNESS_r*.json files the driver writes into the repo root, which
-makes the rotation self-maintaining across rounds: whatever the
-driver's per-round budget, every entry cycles through the verified
-prefix in the fewest possible rounds.
+Registry order comes from the code alone: module order (uber, tpch,
+tpch_extra, events, training, pipeline, scale), then each module's
+QUERIES insertion order. `all_oracles()` lists its names in the same
+order. An entry name registered by two modules is an error.
 """
 
 from __future__ import annotations
 
-import glob
-import json
-import os
-import re
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -27,114 +18,30 @@ from pyspark.sql import DataFrame, SparkSession
 from uber_data_pipeline_spark.queries import uber, tpch, events
 
 
-def _last_green_round() -> dict[str, int]:
-    """name -> latest driver round whose CORRECTNESS file has a full
-    green row (rows+schema+hash) for that name; absent = never."""
-    root = os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    )
-    out: dict[str, int] = {}
-    for path in glob.glob(os.path.join(root, "CORRECTNESS_r*.json")):
-        m = re.search(r"CORRECTNESS_r0*(\d+)\.json$", path)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        try:
-            with open(path) as f:
-                rows = json.load(f)
-        except (OSError, ValueError):
-            continue
-        for name, row in rows.items():
-            if not isinstance(row, dict):
-                continue
-            if (
-                row.get("rows_match")
-                and row.get("schema_match")
-                and row.get("hash_match")
-            ):
-                out[name] = max(out.get(name, 0), rnd)
-    return out
-
-
-def _bench_seconds() -> dict[str, float]:
-    """name -> last measured per-query wall seconds (bench_detail.json,
-    written by bench.py each round); absent/unmeasured = 0."""
-    root = os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    )
-    try:
-        with open(os.path.join(root, "bench_detail.json")) as f:
-            data = json.load(f)
-        qs = data.get("queries", {})
-        return {k: float(v) for k, v in qs.items()}
-    except (OSError, ValueError, TypeError):
-        return {}
-
-
-_EFFECTIVE_GREENS: dict[str, int] | None = None
-
-
-def _effective_greens() -> dict[str, int]:
-    """Last-green round per name, invalidated on implementation change.
-
-    A green row only counts if the entry's CURRENT implementation hash
-    matches the hash recorded (tools/impl_hashes.json) when the driver
-    verified it — an entry rewritten in place re-fronts even though its
-    name has an old green row (VERDICT r4 item 4).  Computed once per
-    process from the canonical module maps so all_queries() and
-    all_oracles() sort identically.
-    """
-    global _EFFECTIVE_GREENS
-    if _EFFECTIVE_GREENS is not None:
-        return _EFFECTIVE_GREENS
-    from uber_data_pipeline_spark.queries import impl_hash
-
-    greens = _last_green_round()
-    recorded = impl_hash.recorded_hashes()
-    fns: dict = {}
-    sqls: dict[str, str] = {}
-    for mod in _modules():
-        fns.update(mod.QUERIES)
-        sqls.update(mod.ORACLES)
-    out: dict[str, int] = {}
-    for n, fn in fns.items():
-        if n in greens and recorded.get(n) == impl_hash.entry_hash(
-            fn, sqls.get(n, "")
-        ):
-            out[n] = greens[n]
-        else:
-            out[n] = -1
-    _EFFECTIVE_GREENS = out
-    return out
-
-
-def _rotated(items: dict) -> dict:
-    greens = _effective_greens()
-    secs = _bench_seconds()
-    names = list(items)
-    # primary: least-recently driver-verified first; secondary: cheaper
-    # first (so a TIME-bounded driver sweep fits the most unverified
-    # entries — works for a count-bounded sweep too); tertiary: the entry
-    # NAME — a key both maps share.  (The r9 verdict caught the old
-    # tertiary key, each map's own insertion order: QUERIES and ORACLES
-    # can enumerate the same names in different orders, so an exact
-    # (green, seconds) tie made the two rotations diverge.)
-    names.sort(key=lambda n: (greens.get(n, -1), secs.get(n, 0.0), n))
-    return {n: items[n] for n in names}
-
-
 def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     out: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
+    owner: dict[str, str] = {}
     for mod in _modules():
-        out.update(mod.QUERIES)
-    return _rotated(out)
+        for name, fn in mod.QUERIES.items():
+            if name in owner:
+                raise ValueError(
+                    f"registry entry {name!r} is registered by both "
+                    f"{owner[name]} and {mod.__name__}"
+                )
+            owner[name] = mod.__name__
+            out[name] = fn
+    return out
 
 
 def all_oracles() -> dict[str, str]:
+    """name -> oracle SQL in `all_queries()` order (a module's ORACLES
+    dict may list its names in another order); a name with no query
+    keeps its place after them."""
     out: dict[str, str] = {}
     for mod in _modules():
         out.update(mod.ORACLES)
-    return _rotated(out)
+    pos = {n: i for i, n in enumerate(all_queries())}
+    return {n: out[n] for n in sorted(out, key=lambda n: pos.get(n, len(pos)))}
 
 
 def all_scalar_broadcast() -> set[str]:

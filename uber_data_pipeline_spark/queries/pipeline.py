@@ -652,11 +652,12 @@ def cdc_merge_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     part = (F.col("o_orderkey") % MERGE_SINK_PARTS).cast("int")
     target = artifact_dir("merge_sink", sf_dir)
     shutil.rmtree(target, ignore_errors=True)
+    staged = base.withColumn("pk_mod", part)
     # cluster on the partition column: one file per partition dir
     # instead of one per (task, dir) — see merge_upsert_partitioned
-    base.withColumn("pk_mod", part).repartition(F.col("pk_mod")).write.partitionBy(
-        "pk_mod"
-    ).mode("overwrite").parquet(target)
+    staged.repartition(F.col("pk_mod")).write.partitionBy("pk_mod").mode(
+        "overwrite"
+    ).parquet(target)
     merge_upsert_partitioned(
         spark,
         target,
@@ -664,7 +665,8 @@ def cdc_merge_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         ["o_orderkey"],
         "pk_mod",
     )
-    return spark.read.parquet(target).select(
+    # read back with the schema written above instead of inferring it
+    return spark.read.schema(staged.schema).parquet(target).select(
         "o_orderkey",
         "o_orderstatus",
         F.col("o_totalprice").alias("total_price"),
