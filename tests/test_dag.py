@@ -216,6 +216,20 @@ def test_elt_days_hold_no_session_per_day(spark, tmp_path):
     assert statistics.linear_regression(range(len(heap)), heap).slope < 2.2, readings
 
 
+def test_rate_sink_runs_hold_no_session_per_run(spark):
+    """Three `streaming_merge_sink_rate` runs leave the JVM with as
+    many live SparkSessions as the first run did: every micro-batch
+    merges on the caller's session. When each batch merged on its
+    stream's clone, the count went 2, 3, 4."""
+    from uber_data_pipeline_spark.queries.pipeline import streaming_merge_sink_rate
+
+    sessions = []
+    for _ in range(3):
+        streaming_merge_sink_rate(spark, SF_DIR)
+        sessions.append(_live_sessions_and_heap(spark)[0])
+    assert sessions == [sessions[0]] * len(sessions), sessions
+
+
 def test_warm_elt_days_compile_no_class(spark, tmp_path):
     """Once one elt day has run, the next two compile no generated
     class: the codegen cache (session.CODEGEN_CACHE_ENTRIES) holds a

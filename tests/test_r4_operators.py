@@ -290,20 +290,6 @@ def test_kmv_underfull_sketch_is_exact(spark):
     assert row.est_intersection == row.exact_intersection
 
 
-def test_tws_sessionizer_matches_batch_when_protobuf_available(spark):
-    """transformWithStateInPandas twin (environment-gated: its worker
-    protocol needs google.protobuf, absent from this container)."""
-    pytest.importorskip("google.protobuf.descriptor")
-    from uber_data_pipeline_spark.streaming.events import (
-        sessionization_stream_tws,
-    )
-
-    from tests.conftest import SF_DIR
-
-    df = sessionization_stream_tws(spark, SF_DIR)
-    assert df.count() > 0
-
-
 def test_snapshot_manifest_stats_skip_files(spark, tmp_path):
     """Manifest-level data skipping: per-file [min,max] recorded at
     commit time prunes non-intersecting files before Spark lists

@@ -12,9 +12,9 @@ from pyspark.sql import functions as F
 from tests.conftest import SF_DIR
 from uber_data_pipeline_spark.catalog import load_table
 from uber_data_pipeline_spark.sources.writers import (
+    PartitionedLake,
     read_table,
     write_bucketed,
-    write_partitioned,
 )
 
 ART = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".artifacts")
@@ -61,33 +61,17 @@ def test_partitioned_write_prunes(spark):
     path = os.path.join(ART, "orders_by_status")
     shutil.rmtree(path, ignore_errors=True)
     orders = load_table(spark, SF_DIR, "orders")
-    write_partitioned(orders, path, ["o_orderstatus"])
+    lake = PartitionedLake.stage(
+        orders, path, ["o_orderkey"], "o_orderstatus", "o_orderstatus"
+    )
     statuses = [r[0] for r in orders.select("o_orderstatus").distinct().collect()]
     part_dirs = sorted(d for d in os.listdir(path) if d.startswith("o_orderstatus="))
     assert part_dirs == sorted(f"o_orderstatus={s}" for s in statuses)
-    df = spark.read.parquet(path).filter(F.col("o_orderstatus") == statuses[0])
+    df = lake.read(spark).filter(F.col("o_orderstatus") == statuses[0])
     plan = df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
     assert "PartitionFilters: [" in plan
     pf = plan.split("PartitionFilters: [", 1)[1].split("]", 1)[0]
     assert "o_orderstatus" in pf, plan[:1500]
-
-
-def test_dynamic_partition_overwrite_is_incremental(spark):
-    """Overwriting with a frame containing ONE partition must leave
-    the other partitions untouched."""
-    path = os.path.join(ART, "orders_dyn")
-    shutil.rmtree(path, ignore_errors=True)
-    orders = load_table(spark, SF_DIR, "orders")
-    write_partitioned(orders, path, ["o_orderstatus"])
-    before = spark.read.parquet(path).count()
-    one = orders.filter(F.col("o_orderstatus") == "F").limit(10)
-    write_partitioned(one, path, ["o_orderstatus"])  # dynamic overwrite of F only
-    after = spark.read.parquet(path)
-    assert after.filter(F.col("o_orderstatus") == "F").count() == 10
-    assert after.filter(F.col("o_orderstatus") != "F").count() == (
-        orders.filter(F.col("o_orderstatus") != "F").count()
-    )
-    assert after.count() < before
 
 
 def test_merge_upsert_touches_only_changed_partitions(spark):
@@ -192,28 +176,49 @@ def test_merge_sweeps_swap_aside_left_by_a_crash(spark):
     shutil.rmtree(path, ignore_errors=True)
 
 
-def test_cdc_merge_sink_reads_back_without_a_job(spark, monkeypatch):
-    """`cdc_merge_sink` re-reads its merged lake with the schema it
-    wrote, so building the result after the merge runs no Spark job
-    (inferring the schema from the footers runs one)."""
-    from uber_data_pipeline_spark.queries.pipeline import cdc_merge_sink
+def test_sinks_read_back_without_a_job(spark, monkeypatch):
+    """The three lake-sink entries and the late-data audit re-read
+    what they wrote with the schema they wrote, so building the result
+    after the last write runs no Spark job (inferring the schema from
+    the footers runs one). The job group goes on the caller's thread
+    after the merge (`cdc_merge_sink`) or after the stream's
+    awaitTermination returns: inside foreachBatch it would tag the
+    stream's thread, not the read-back."""
+    from pyspark.sql.streaming import StreamingQuery
+
+    from uber_data_pipeline_spark.queries.pipeline import (
+        cdc_merge_sink,
+        streaming_merge_sink,
+        streaming_merge_sink_rate,
+    )
     from uber_data_pipeline_spark.sources import writers
+    from uber_data_pipeline_spark.streaming.events import late_data_audit_stream
 
     sc = spark.sparkContext
-    group = "cdc-merge-sink-read-back"
-    merge = writers.merge_upsert_partitioned
+    jobs = {}
+    for entry, owner, last_write in [
+        (cdc_merge_sink, writers, "merge_upsert_partitioned"),
+        (streaming_merge_sink, StreamingQuery, "awaitTermination"),
+        (streaming_merge_sink_rate, StreamingQuery, "awaitTermination"),
+        (late_data_audit_stream, StreamingQuery, "awaitTermination"),
+    ]:
+        group = f"{entry.__name__}-read-back"
+        write = getattr(owner, last_write)
 
-    def merge_then_count(*args, **kwargs):
-        merge(*args, **kwargs)
-        sc.setJobGroup(group, group)
+        def write_then_tag(*args, write=write, group=group, **kwargs):
+            out = write(*args, **kwargs)
+            sc.setJobGroup(group, group)
+            return out
 
-    monkeypatch.setattr(writers, "merge_upsert_partitioned", merge_then_count)
-    try:
-        cdc_merge_sink(spark, SF_DIR)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 0
+        with monkeypatch.context() as m:
+            m.setattr(owner, last_write, write_then_tag)
+            try:
+                entry(spark, SF_DIR)
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+        jobs[entry.__name__] = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs == dict.fromkeys(jobs, 0), jobs
 
 
 def test_bucketed_layout_restages_on_a_same_second_rewrite(spark, tmp_path, monkeypatch):

@@ -55,49 +55,40 @@ def run_dag(
     registry: ModelRegistry,
     sf_dir: str,
     out_dir: str,
-    select: set[str] | None = None,
-    materialize: bool = True,
 ) -> list[BuildResult]:
-    """Materialize the selected models (and their upstreams) in
-    dependency-level order: levels run sequentially, models WITHIN a
-    level concurrently (they are independent by construction — the
-    dbt/Dagster thread-pool execution model; Spark's FIFO scheduler
-    interleaves the sibling jobs across the executor pool).
-    ``materialize=False`` builds views only (a dry run /
-    `dbt compile`).
+    """Materialize every model of ``registry`` in dependency-level
+    order: levels run sequentially, models WITHIN a level concurrently
+    (they are independent by construction — the dbt/Dagster
+    thread-pool execution model; Spark's FIFO scheduler interleaves
+    the sibling jobs across the executor pool).
 
-    Only the source tables the selected models name in their ``deps``
-    are loaded and registered as views (a dbt run resolves just the
+    Only the source tables the models name in their ``deps`` are
+    loaded and registered as views (a dbt run resolves just the
     ``source()`` relations its models reference), so ``sf_dir`` needs
     to hold only those tables. A materialized model is read back with
     the schema of the frame that wrote it, so neither step runs a
     schema-inference job for a schema the engine already knows.
 
-    ``BuildResult.n_rows`` of a materialized model is the sum of
-    ``num_rows`` over the footers of the files its write produced, so
-    counting runs no Spark job; with ``materialize=False`` it is the
-    view's ``count()``."""
+    ``BuildResult.n_rows`` is the sum of ``num_rows`` over the footers
+    of the files a model's write produced, so counting runs no Spark
+    job."""
     from concurrent.futures import ThreadPoolExecutor
 
-    levels = registry.topo_levels(select)
+    levels = registry.topo_levels()
     _register_sources(spark, registry, [m for level in levels for m in level], sf_dir)
 
     def build_one(model) -> BuildResult:
         t0 = time.perf_counter()
         df: DataFrame = model.build(spark)
         path = os.path.join(out_dir, model.name)
-        if materialize:
-            df.write.mode("overwrite").parquet(path)
-            n_rows = _written_rows(path)
-            df = spark.read.schema(df.schema).parquet(path)
-        else:
-            n_rows = df.count()
-        df.createOrReplaceTempView(model.name)
+        df.write.mode("overwrite").parquet(path)
+        n_rows = _written_rows(path)
+        spark.read.schema(df.schema).parquet(path).createOrReplaceTempView(model.name)
         return BuildResult(
             model=model.name,
             n_rows=n_rows,
             seconds=round(time.perf_counter() - t0, 3),
-            path=path if materialize else "",
+            path=path,
         )
 
     results: list[BuildResult] = []

@@ -1,5 +1,5 @@
-"""Declarative models: name + deps + a SQL string or DataFrame
-function, materialized to parquet.
+"""Declarative models: name + deps + a SQL string, materialized to
+parquet.
 
 Mirrors the reference's dbt project layout (models that ``ref()``
 each other plus ``sources.yml`` tables,
@@ -10,7 +10,6 @@ model's SQL refers to its deps and to source tables by plain name.
 
 from __future__ import annotations
 
-from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -36,9 +35,7 @@ class IncrementalSpec:
 class Model:
     name: str
     deps: tuple[str, ...]
-    # either a SQL string (views by name, dbt-style) or fn(spark) -> DataFrame
-    sql: str | None = None
-    fn: Callable[[SparkSession], DataFrame] | None = None
+    sql: str  # refers to deps and source tables as views by name, dbt-style
     description: str = ""
     # cron string — the Dagster ScheduleDefinition analog (the
     # reference runs its asset graph @daily,
@@ -49,13 +46,10 @@ class Model:
     def build(
         self, spark: SparkSession, incremental_filter: str = "1=1"
     ) -> DataFrame:
-        if self.sql is not None:
-            sql = self.sql
-            if self.incremental is not None:
-                sql = sql.format(incremental_filter=incremental_filter)
-            return spark.sql(sql)
-        assert self.fn is not None, f"model {self.name} has neither sql nor fn"
-        return self.fn(spark)
+        sql = self.sql
+        if self.incremental is not None:
+            sql = sql.format(incremental_filter=incremental_filter)
+        return spark.sql(sql)
 
 
 @dataclass
@@ -122,12 +116,12 @@ class ModelRegistry:
             raise ValueError(f"dependency cycle among {sorted(cyclic)}")
         return order
 
-    def topo_levels(self, select: set[str] | None = None) -> list[list[Model]]:
+    def topo_levels(self) -> list[list[Model]]:
         """Dependency levels: level k holds models whose deps are all
         in levels < k. Models within a level are independent and can
         materialize concurrently (dbt/Dagster run siblings with a
         thread pool; Spark's scheduler interleaves their jobs)."""
-        order = self.topo_order(select)
+        order = self.topo_order()
         depth: dict[str, int] = {}
         for m in order:
             depth[m.name] = 1 + max(

@@ -26,6 +26,7 @@ from uber_data_pipeline_spark.sources.staging import (
     spark_success,
 )
 from uber_data_pipeline_spark.sources.cdc import merge_latest, scd2_history
+from uber_data_pipeline_spark.sources.writers import PartitionedLake
 from uber_data_pipeline_spark.streaming.events import (
     LATE_AUDIT_CUT,
     RATE_MOD,
@@ -636,37 +637,25 @@ _DUE_RUN_ORACLE = """
 
 
 MERGE_SINK_PARTS = 16
+_MERGE_SINK_PART = f"CAST(o_orderkey % {MERGE_SINK_PARTS} AS INT)"
 
 
 def cdc_merge_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MERGE-into-storage: the CDC delta is UPSERTED into a partitioned
     parquet target via sources.writers.merge_upsert_partitioned
     (partition-pruned read of touched partitions, anti-join out
-    replaced keys, dynamic partition overwrite) — the BigQuery-MERGE
+    replaced keys, swap in only the rewritten partitions) — the BigQuery-MERGE
     role in the reference's load step, on a plain parquet lake. The
     re-read table must equal the pure-relational CDC merge, so this
     entry shares `cdc_incremental_merge`'s oracle."""
-    from uber_data_pipeline_spark.sources.writers import merge_upsert_partitioned
-
     base, delta = _cdc_frames(spark, sf_dir)
-    part = (F.col("o_orderkey") % MERGE_SINK_PARTS).cast("int")
     target = artifact_dir("merge_sink", sf_dir)
     shutil.rmtree(target, ignore_errors=True)
-    staged = base.withColumn("pk_mod", part)
-    # cluster on the partition column: one file per partition dir
-    # instead of one per (task, dir) — see merge_upsert_partitioned
-    staged.repartition(F.col("pk_mod")).write.partitionBy("pk_mod").mode(
-        "overwrite"
-    ).parquet(target)
-    merge_upsert_partitioned(
-        spark,
-        target,
-        delta.withColumn("pk_mod", part),
-        ["o_orderkey"],
-        "pk_mod",
+    lake = PartitionedLake.stage(
+        base, target, ["o_orderkey"], _MERGE_SINK_PART, "pk_mod"
     )
-    # read back with the schema written above instead of inferring it
-    return spark.read.schema(staged.schema).parquet(target).select(
+    lake.merge(spark, delta)
+    return lake.read(spark).select(
         "o_orderkey",
         "o_orderstatus",
         F.col("o_totalprice").alias("total_price"),
@@ -695,7 +684,7 @@ def streaming_merge_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         target_path=os.path.join(root, "target"),
         checkpoint_dir=os.path.join(root, "checkpoint"),
         key_cols=["o_orderkey"],
-        part_expr=f"CAST(o_orderkey % {MERGE_SINK_PARTS} AS INT)",
+        part_expr=_MERGE_SINK_PART,
     )
     return merged.select(
         "o_orderkey",

@@ -1,12 +1,12 @@
 """Sink-side storage layout: the decisions that dominate read cost at
 100 TB.
 
-- ``write_partitioned``: date/key-partitioned parquet lake layout —
+- ``PartitionedLake``: date/key-partitioned parquet lake layout —
   readers hit only matching partition directories (PartitionFilters
-  in the scan), and dynamic partition overwrite makes daily re-runs
-  idempotent per partition instead of truncate-and-reload (the
-  reference's Airbyte sync is full-refresh per day; this is the
-  incremental equivalent).
+  in the scan), and ``merge_upsert_partitioned`` upserts a change set
+  by rewriting only the partitions it touches instead of
+  truncate-and-reload (the reference's Airbyte sync is full-refresh
+  per day; this is the incremental equivalent).
 - ``write_bucketed``: pre-shuffled table layout. Two tables bucketed
   by the same key into the same bucket count join WITHOUT a shuffle
   on either side — the fact-fact join cost (e.g. orders x lineitem
@@ -17,25 +17,61 @@
 from __future__ import annotations
 
 import os
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
-def write_partitioned(
-    df: DataFrame,
-    path: str,
-    partition_cols: list[str],
-    mode: str = "overwrite",
-) -> None:
-    """Partitioned parquet write; an overwrite replaces only the
-    partitions present in ``df`` (idempotent incremental loads)."""
-    (
-        df.write.mode(mode)
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(*partition_cols)
-        .parquet(path)
-    )
+@dataclass(frozen=True)
+class PartitionedLake:
+    """The parquet table every CDC merge sink writes: ``path`` holds a
+    base table's columns plus ``part_col``, which ``part_expr`` derives
+    from them, partitioned by ``part_col`` and keyed by ``key_cols``.
+    ``schema`` is the one the base was staged with, so reading the lake
+    back runs no schema-inference job."""
+
+    path: str
+    key_cols: list[str]
+    part_expr: str
+    part_col: str
+    schema: StructType
+
+    @classmethod
+    def stage(
+        cls,
+        base: DataFrame,
+        path: str,
+        key_cols: list[str],
+        part_expr: str,
+        part_col: str,
+    ) -> PartitionedLake:
+        """Create the lake from ``base`` unless a complete one
+        (``_SUCCESS``) is already at ``path``: a restarted stream must
+        merge into the merged table, not wipe it back to the base. The
+        write clusters by the partition column, so each partition dir
+        gets one file (see merge_upsert_partitioned's small-file
+        note)."""
+        staged = base.withColumn(part_col, F.expr(part_expr))
+        if not os.path.exists(os.path.join(path, "_SUCCESS")):
+            staged.repartition(F.col(part_col)).write.partitionBy(
+                part_col
+            ).mode("overwrite").parquet(path)
+        return cls(path, key_cols, part_expr, part_col, staged.schema)
+
+    def merge(self, spark: SparkSession, changes: DataFrame) -> None:
+        """Upsert ``changes`` (the base's columns) on ``spark``."""
+        merge_upsert_partitioned(
+            spark,
+            self.path,
+            changes.withColumn(self.part_col, F.expr(self.part_expr)),
+            self.key_cols,
+            self.part_col,
+        )
+
+    def read(self, spark: SparkSession) -> DataFrame:
+        return spark.read.schema(self.schema).parquet(self.path)
 
 
 def write_bucketed(
@@ -82,7 +118,8 @@ def merge_upsert_partitioned(
     partition-overwrite upsert pattern that needs no table format:
 
     1. the partitions touched by ``changes`` are identified (the
-       collect is bounded by partition cardinality, a layout constant);
+       collect is bounded by partition cardinality, a layout constant),
+       and a change set that touches none returns here;
     2. ONLY those partitions are read back (partition pruning — the
        predicate is on the partition column), matched rows are
        anti-joined out, and the change rows unioned in;
@@ -142,6 +179,8 @@ def merge_upsert_partitioned(
                 raise IOError(f"merge sweep: could not restore {live}")
         fs.delete(aside_root, True)
     changed = [r[0] for r in changes.select(part_col).distinct().collect()]
+    if not changed:
+        return
     touched = F.col(part_col).isin(changed)
     if None in changed:
         # isin never matches NULL: without this arm the default

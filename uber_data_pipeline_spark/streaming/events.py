@@ -17,13 +17,15 @@ from __future__ import annotations
 import itertools
 import os
 import shutil
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 from typing import Any
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.types import LongType, StructField, StructType
 
 from uber_data_pipeline_spark.functions.numeric import dsum
 from uber_data_pipeline_spark.session import scoped_session
@@ -33,6 +35,7 @@ from uber_data_pipeline_spark.sources.staging import (
     ensure_staged,
     file_identity,
 )
+from uber_data_pipeline_spark.sources.writers import PartitionedLake
 
 SESSION_GAP_SECONDS = 1800
 _sink_ids = itertools.count()
@@ -139,17 +142,20 @@ _SESSION_OUT_SCHEMA = (
 )
 
 
-def _session_fold(user_id, state, pdfs):
-    """Core gap-sessionizer fold shared by the applyInPandasWithState
-    kernel and the transformWithState processor: consume the batch's
-    timestamp chunks, return (emitted rows, new state tuple). State =
-    (start_us, last_us, n, session_id); emits a snapshot row per
-    session touched (the final emission for a session is its closed
-    form)."""
+def _session_kernel(
+    key: tuple[Any, ...],
+    batches: Iterator[pd.DataFrame],
+    state: GroupState,
+) -> Iterator[pd.DataFrame]:
+    """Gap-sessionizer fold for applyInPandasWithState: consume the
+    batch's timestamp chunks into the user's state = (start_us,
+    last_us, n, session_id), and emit a snapshot row per session
+    touched (the final emission for a session is its closed form)."""
     gap_us = SESSION_GAP_SECONDS * 1_000_000
-    start, last, n, sid = state
+    (user_id,) = key
+    start, last, n, sid = state.get if state.exists else (None, None, 0, 0)
     out: list[tuple] = []
-    for pdf in pdfs:
+    for pdf in batches:
         ts = pdf["ts"]
         if getattr(ts.dt, "tz", None) is not None:
             ts = ts.dt.tz_convert("UTC").dt.tz_localize(None)
@@ -157,42 +163,23 @@ def _session_fold(user_id, state, pdfs):
         for t in ts_us:
             if last is None or t - last > gap_us:
                 if last is not None:
-                    out.append((user_id, sid, n, start, last))  # close previous
+                    out.append((sid, n, start, last))  # close previous
                 sid, start, n = sid + 1, t, 1
             else:
                 n += 1
             last = t
     if last is not None:
-        out.append((user_id, sid, n, start, last))  # snapshot of the open one
-    return out, (start, last, n, sid)
-
-
-def _session_frame(rows: list[tuple]) -> pd.DataFrame:
-    return pd.DataFrame(
+        out.append((sid, n, start, last))  # snapshot of the open one
+    state.update((start, last, n, sid))
+    yield pd.DataFrame(
         {
-            "user_id": [r[0] for r in rows],
-            "session_id": [r[1] for r in rows],
-            "n_events": [r[2] for r in rows],
-            "session_start": pd.to_datetime([r[3] for r in rows], unit="us"),
-            "session_end": pd.to_datetime([r[4] for r in rows], unit="us"),
+            "user_id": [user_id] * len(out),
+            "session_id": [r[0] for r in out],
+            "n_events": [r[1] for r in out],
+            "session_start": pd.to_datetime([r[2] for r in out], unit="us"),
+            "session_end": pd.to_datetime([r[3] for r in out], unit="us"),
         }
     )
-
-
-def _session_kernel(
-    key: tuple[Any, ...],
-    batches: Iterator[pd.DataFrame],
-    state: GroupState,
-) -> Iterator[pd.DataFrame]:
-    """applyInPandasWithState wrapper over :func:`_session_fold`."""
-    if state.exists:
-        st = state.get
-    else:
-        st = (None, None, 0, 0)
-    (user_id,) = key
-    out, new_st = _session_fold(user_id, st, batches)
-    state.update(new_st)
-    yield _session_frame(out)
 
 
 ATTRIBUTION_WINDOW_MINUTES = 30
@@ -318,6 +305,36 @@ def sessionization_stream(
     return _run_to_memory(sessions, "update")
 
 
+def _merge_stream(
+    spark: SparkSession,
+    changes: DataFrame,
+    reduce: Callable[[DataFrame], DataFrame],
+    lake: PartitionedLake,
+    checkpoint_dir: str,
+) -> DataStreamWriter:
+    """The writer of both merge streams, without its trigger: each
+    micro-batch of ``changes`` is re-homed onto ``spark``, reduced to
+    one change row per key by ``reduce`` and merged into ``lake``.
+
+    The merge runs on the caller's session, not on the stream's clone
+    (bdf.sparkSession): each exchange Spark starts spawns a pool thread
+    that inherits the running query's session as its active one and
+    outlives the run, so a merge on the clone kept every run's clone
+    (one SparkSession, ~1.4 MiB) reachable. It also plans with
+    ``spark``'s conf (AQE on; the stream's clone turns AQE off)."""
+
+    def apply_batch(bdf: DataFrame, batch_id: int) -> None:
+        rows = DataFrame(
+            spark._jsparkSession.createDataFrame(bdf._jdf.rdd(), bdf._jdf.schema()),
+            spark,
+        )
+        lake.merge(spark, reduce(rows))
+
+    return changes.writeStream.foreachBatch(apply_batch).option(
+        "checkpointLocation", checkpoint_dir
+    )
+
+
 def merge_sink_stream(
     spark: SparkSession,
     base: DataFrame,
@@ -354,27 +371,10 @@ def merge_sink_stream(
     Scale shape: per batch, cost is bounded by the touched partitions
     (see merge_upsert_partitioned) plus one shuffle of the change rows
     by key; state is only the file-source log. Returns the final
-    merged table, read with the schema it was written with (``base``
-    plus ``part_col``), so returning it runs no schema-inference job.
-
-    Session: the batch's rows are re-homed onto ``spark`` and merged
-    there, so a run leaves no reference to the stream's cloned session
-    behind, and the merge plans with ``spark``'s conf (AQE on; the
-    stream's clone turns AQE off)."""
+    merged table (``base`` plus ``part_col``, see PartitionedLake)."""
     from pyspark.sql import Window
 
-    from uber_data_pipeline_spark.sources.writers import merge_upsert_partitioned
-
-    # cluster on the partition column: one staged file per partition
-    # dir (see merge_upsert_partitioned's small-file note). Staged
-    # only if the target doesn't exist yet — a RESTART of the stream
-    # (same checkpoint, new files landed) must merge into the already-
-    # merged table, not wipe it back to the base snapshot.
-    if not os.path.exists(os.path.join(target_path, "_SUCCESS")):
-        base.withColumn(part_col, F.expr(part_expr)).repartition(
-            F.col(part_col)
-        ).write.partitionBy(part_col).mode("overwrite").parquet(target_path)
-
+    lake = PartitionedLake.stage(base, target_path, key_cols, part_expr, part_col)
     changes = spark.readStream.schema(delta_schema).parquet(delta_dir).select(
         "*",
         F.struct(
@@ -384,38 +384,17 @@ def merge_sink_stream(
     )
     by_key = Window.partitionBy(*key_cols)
 
-    def apply_batch(bdf: DataFrame, batch_id: int) -> None:
-        # merge on the caller's session, not on the stream's clone
-        # (bdf.sparkSession): each exchange Spark starts spawns a pool
-        # thread that inherits the running query's session as its
-        # active one and outlives the run, so a merge on the clone kept
-        # every day's clone (one SparkSession, ~1.4 MiB) reachable
-        rows = DataFrame(
-            spark._jsparkSession.createDataFrame(bdf._jdf.rdd(), bdf._jdf.schema()),
-            spark,
-        )
-        newest = (
+    def newest(rows: DataFrame) -> DataFrame:
+        return (
             rows.withColumn("_newest_file", F.max("_src_file").over(by_key))
             .filter(F.col("_src_file") == F.col("_newest_file"))
             .drop("_src_file", "_newest_file")
         )
-        merge_upsert_partitioned(
-            spark,
-            target_path,
-            newest.withColumn(part_col, F.expr(part_expr)),
-            key_cols,
-            part_col,
-        )
 
-    q = (
-        changes.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    written = base.withColumn(part_col, F.expr(part_expr)).schema
-    return spark.read.schema(written).parquet(target_path)
+    _merge_stream(spark, changes, newest, lake, checkpoint_dir).trigger(
+        availableNow=True
+    ).start().awaitTermination()
+    return lake.read(spark)
 
 
 # --- rate-source merge sink -------------------------------------------
@@ -475,13 +454,9 @@ def merge_sink_stream_rate(
     rewrites only the touched partitions. Offset/trigger handling is
     the source's own (batch id advances per trigger; the checkpoint
     replays exact value ranges on recovery)."""
-    from uber_data_pipeline_spark.sources.writers import merge_upsert_partitioned
-
-    if not os.path.exists(os.path.join(target_path, "_SUCCESS")):
-        base.withColumn(part_col, F.expr(part_expr)).repartition(
-            F.col(part_col)
-        ).write.partitionBy(part_col).mode("overwrite").parquet(target_path)
-
+    lake = PartitionedLake.stage(
+        base, target_path, ["o_orderkey"], part_expr, part_col
+    )
     # cohort dimension: the keys the feed can ever touch (bounded:
     # RATE_MOD/RATE_KEY_MOD of the table), computed once and reused
     # every batch
@@ -498,15 +473,12 @@ def merge_sink_stream_rate(
         .option("numPartitions", "4")
         .load()
     )
-    changes = rate_change_rows(rate)
 
-    def apply_batch(bdf: DataFrame, batch_id: int) -> None:
-        if bdf.isEmpty():
-            return
+    def compact(rows: DataFrame) -> DataFrame:
         # per-batch compaction: last writer (max version) per key
         # cohort; versions are distinct so the struct max is total
-        compact = (
-            bdf.groupBy("key_res")
+        last = (
+            rows.groupBy("key_res")
             .agg(
                 F.max(
                     F.struct("version", "o_orderstatus", "o_totalprice")
@@ -514,18 +486,12 @@ def merge_sink_stream_rate(
             )
             .select("key_res", "s.*")
         )
-        upserts = (
-            cohort.join(F.broadcast(compact), "key_res")
-            .select("o_orderkey", "o_orderstatus", "o_totalprice", "version")
-            .withColumn(part_col, F.expr(part_expr))
-        )
-        merge_upsert_partitioned(
-            bdf.sparkSession, target_path, upserts, ["o_orderkey"], part_col
+        return cohort.join(F.broadcast(last), "key_res").select(
+            "o_orderkey", "o_orderstatus", "o_totalprice", "version"
         )
 
     q = (
-        changes.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
+        _merge_stream(spark, rate_change_rows(rate), compact, lake, checkpoint_dir)
         # paced trigger: leaves an idle gap after each batch so the
         # post-threshold stop below lands between batches, and bounds
         # the busy-loop rate of the no-op tail batches
@@ -551,25 +517,26 @@ def merge_sink_stream_rate(
         if done >= last_batch:
             break
         time.sleep(0.2)
-    # stop in the idle gap right after a batch completes (the paced
-    # trigger leaves ~1 s of quiet) so stop() never interrupts an
-    # in-flight foreachBatch callback — an interrupted callback
-    # surfaces as uncaught-exception noise in the stream thread
+    # stop in an idle gap between batches so stop() does not interrupt
+    # an in-flight foreachBatch callback — an interrupted callback
+    # surfaces as uncaught-exception noise in the stream thread. The
+    # paced trigger fires on wall-clock multiples of its interval, so
+    # the gap after a batch is anywhere from 0 to 500 ms: poll for it
+    # rather than stopping on a fixed delay after a progress event.
     settle = time.monotonic() + 10
-    while done >= last_batch and time.monotonic() < settle:
-        new_done = max(
-            (p["batchId"] for p in q.recentProgress), default=-1
-        )
-        if new_done > done:
-            break
-        time.sleep(0.05)
+    while (
+        done >= last_batch
+        and q.status["isTriggerActive"]
+        and time.monotonic() < settle
+    ):
+        time.sleep(0.01)
     q.stop()
     q.awaitTermination()
     if done < last_batch:
         raise TimeoutError(
             f"rate feed completed batch {done} < {last_batch} in 120s"
         )
-    return spark.read.parquet(target_path)
+    return lake.read(spark)
 
 
 def sessionization_stream_rocksdb(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -726,7 +693,7 @@ def late_data_audit_stream(
     log_dir = os.path.join(root, "emit_log")
 
     def apply_batch(bdf: DataFrame, batch_id: int) -> None:
-        bdf.withColumn("batch_id", F.lit(batch_id)).write.mode(
+        bdf.withColumn("batch_id", F.lit(batch_id).cast("bigint")).write.mode(
             "append"
         ).parquet(log_dir)
 
@@ -744,8 +711,10 @@ def late_data_audit_stream(
     w = Window.partitionBy("window_start", "event_type").orderBy(
         F.desc("batch_id")
     )
+    # read the log with the schema its batches wrote, not an inferred one
     return (
-        spark.read.parquet(log_dir)
+        spark.read.schema(StructType([*agg.schema, StructField("batch_id", LongType())]))
+        .parquet(log_dir)
         .withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") == 1)
         .select("window_start", "event_type", "n_events", "sum_value")
@@ -794,64 +763,3 @@ def state_store_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-
-class _SessionProcessor:
-    """transformWithState sessionizer — the Spark 4 arbitrary-state
-    API (typed keyed state + timers + TTL), successor to
-    applyInPandasWithState. Same gap logic as _session_kernel; state
-    is a typed ValueState row instead of the positional tuple. The
-    always-on deploy registers a processing-time timer ~= the gap in
-    handleInputRows and closes idle sessions in handleExpiredTimer;
-    the finite AvailableNow feed never needs it (timeMode None)."""
-
-    def init(self, handle) -> None:
-        self._state = handle.getValueState(
-            "sess", "start long, last long, n long, sid long"
-        )
-
-    def close(self) -> None:
-        pass
-
-    def handleInputRows(self, key, rows, timer_values):
-        st = (
-            self._state.get() if self._state.exists() else (None, None, 0, 0)
-        )
-        (user_id,) = key
-        out, new_st = _session_fold(user_id, st, rows)
-        self._state.update(new_st)
-        yield _session_frame(out)
-
-
-def sessionization_stream_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """`streaming_sessionization` through transformWithStateInPandas —
-    identical sessions (the batch oracle verifies it wherever it can
-    run). The API delta vs applyInPandasWithState: state is NAMED and
-    TYPED per handle (value/list/map states, TTLs, timers, initial
-    state), which is what multi-state operators and state migration
-    need at 100 TB.
-
-    ENVIRONMENT GATE: the transformWithState protocol serializes its
-    state-server messages with protobuf; this container ships no
-    `google.protobuf`, so the worker crashes at import
-    (STREAMING_PYTHON_RUNNER_INITIALIZATION_FAILURE). The operator is
-    therefore NOT in the driver registry here — tests skip it via
-    importorskip, and it registers cleanly on any deployment with
-    protobuf installed (the applyInPandasWithState twin
-    `streaming_sessionization` covers the semantics in-registry)."""
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    _SessionProcessorCls = type(
-        "_SessionProcessorTws", (_SessionProcessor, StatefulProcessor), {}
-    )
-    ev = read_stream_events(
-        scoped_session(spark, _STATE_CONF), events_landing_dir(sf_dir)
-    ).select(
-        "user_id", "ts"
-    )
-    sessions = ev.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=_SessionProcessorCls(),
-        outputStructType=_SESSION_OUT_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
-    )
-    return _run_to_memory(sessions, "update")
