@@ -29,7 +29,7 @@ def entry(spark: SparkSession) -> DataFrame:
     top_3_base_names_by_total_pickups.sql) re-based onto the star
     schema.
     """
-    from uber_data_pipeline_spark.queries.uber import top3_bases_by_pickups
+    top3_bases_by_pickups = queries()["top3_bases_by_pickups"]
 
     return top3_bases_by_pickups(spark, "/root/testdata/sf0.001")
 

@@ -1,7 +1,8 @@
 """Model-DAG semantics: topological ordering, dbt-style upstream
 selection, cycle detection, and — the parity guarantee — the
 materialized DAG models produce the same results as the registry's
-reference-parity queries."""
+reference-parity queries, which build the same models over the source
+tables."""
 
 from __future__ import annotations
 
@@ -13,9 +14,10 @@ import pytest
 
 import __spark_entry__ as entrymod
 from tests.conftest import SF_DIR
-from uber_data_pipeline_spark.plans.dag import run_dag
+from uber_data_pipeline_spark.plans.dag import refresh_incremental, run_dag
 from uber_data_pipeline_spark.plans.model import Model, ModelRegistry
 from uber_data_pipeline_spark.plans.uber_models import build_registry
+from uber_data_pipeline_spark.queries import uber
 from uber_data_pipeline_spark.testing import compare
 
 ART = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".artifacts")
@@ -24,7 +26,9 @@ ART = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), 
 PARITY = {
     "top_3_bases_by_total_pickups": "top3_bases_by_pickups",
     "pickup_percentile_by_base_per_month": "pickup_percentile_by_base_per_month",
+    "top_3_pickup_dates_per_base": "top3_pickup_dates_per_base",
     "pickup_count_vs_average_per_base": "pickup_count_vs_average_per_base",
+    "unter_grun_pickups_in_bronx": "unter_grun_pickups_in_bronx",
     "total_pickups_in_may_by_base": "total_pickups_in_may_by_base",
 }
 
@@ -50,8 +54,11 @@ def test_cycle_detection():
 
 
 def test_dag_models_match_reference_queries(spark):
-    """Materialized dbt-style models == the DataFrame-API queries the
-    driver verifies against DuckDB — one logical plan, two frontends."""
+    """Each of the six materialized dbt-style marts == the registry
+    entry the driver verifies against DuckDB. The entry builds the
+    same model SQL over the source tables with ``stg_pickups``
+    inlined; the DAG builds it over the materialized ``stg_pickups``."""
+    assert sorted(PARITY.values()) == sorted(uber.QUERIES)
     out_dir = os.path.join(ART, "dag_parity")
     shutil.rmtree(out_dir, ignore_errors=True)
     run_dag(spark, build_registry(), SF_DIR, out_dir)
@@ -77,6 +84,59 @@ def test_run_dag_loads_only_its_deps(spark, tmp_path):
     assert len(full) == 8
     for a, b in zip(only_deps, full):
         assert a.n_rows == b.n_rows, a.model
+        problems = compare(
+            a.model,
+            spark.read.parquet(a.path).toPandas(),
+            spark.read.parquet(b.path).toPandas(),
+        )
+        assert not problems, f"{a.model}: " + "; ".join(problems)
+
+
+def test_entry_returns_rows(spark):
+    assert entrymod.entry(spark).count() > 0
+
+
+def _temp_views(spark) -> list[str]:
+    return sorted(t.name for t in spark.catalog.listTables() if t.isTemporary)
+
+
+@pytest.mark.parametrize(
+    "op", ["run_dag", "refresh_incremental", *uber.QUERIES, "text_udtf_bigrams"]
+)
+def test_session_temp_views_unchanged(spark, tmp_path, op):
+    """Models get their inputs as arguments: run_dag, refresh_incremental,
+    the six uber entries and the bigram UDTF leave the session's temp
+    views as they found them (run_dag used to leave 12)."""
+    # a view an earlier test left under the same name would hide a
+    # re-registration
+    for name in _temp_views(spark):
+        spark.catalog.dropTempView(name)
+    if op == "run_dag":
+        run_dag(spark, build_registry(), SF_DIR, str(tmp_path))
+    elif op == "refresh_incremental":
+        refresh_incremental(
+            spark, build_registry(), "monthly_status_rollup", SF_DIR,
+            str(tmp_path), "1995-01-01",
+        )
+    else:
+        entrymod.queries()[op](spark, SF_DIR).collect()
+    assert _temp_views(spark) == []
+
+
+def test_callers_orders_view_survives_run_dag(spark, tmp_path):
+    """A caller's own ``orders`` view, filtered to one row, is neither
+    replaced nor read by run_dag: the DAG's outputs equal those of a run
+    without the view."""
+    plain = run_dag(spark, build_registry(), SF_DIR, str(tmp_path / "a"))
+    spark.read.parquet(os.path.join(SF_DIR, "orders.parquet")).limit(1) \
+        .createOrReplaceTempView("orders")
+    try:
+        with_view = run_dag(spark, build_registry(), SF_DIR, str(tmp_path / "b"))
+        assert spark.table("orders").count() == 1
+    finally:
+        spark.catalog.dropTempView("orders")
+    assert [(r.model, r.n_rows) for r in with_view] == [(r.model, r.n_rows) for r in plain]
+    for a, b in zip(with_view, plain):
         problems = compare(
             a.model,
             spark.read.parquet(a.path).toPandas(),

@@ -210,11 +210,11 @@ def test_watermark_drop_is_delay_driven(spark):
 
 
 def test_pyds_stream_offsets_replay_deterministically(spark, tmp_path):
-    """The commit-stream reader's offset protocol: read() from -1
-    drains everything and advances to the latest version; a recovery
-    replay (readBetweenOffsets) over a sub-range returns exactly that
-    range's rows."""
-    from uber_data_pipeline_spark.sources.pyds import SnapshotCommitStreamReader
+    """The commit-stream reader's offset protocol: latestOffset() is
+    the newest commit version, the range from -1 plans every commit
+    file, and a recovery replay of a sub-range (partitions over
+    (start, end]) lists exactly that range's files, every time."""
+    from uber_data_pipeline_spark.sources.pyds import SnapshotCommitPartitionedReader
     from uber_data_pipeline_spark.sources.snapshots import commit_snapshot
 
     root = str(tmp_path / "commits")
@@ -230,14 +230,23 @@ def test_pyds_stream_offsets_replay_deterministically(spark, tmp_path):
             v,
             mode="append",
         )
-    r = SnapshotCommitStreamReader({"root": root})
-    rows, end = r.read(r.initialOffset())
+    r = SnapshotCommitPartitionedReader({"root": root})
+    end = r.latestOffset()
     assert end == {"version": 2}
-    assert len(list(rows)) == 15
-    mid = list(r.readBetweenOffsets({"version": 0}, {"version": 1}))
-    assert sorted(t[0] for t in mid) == list(range(10, 15))
-    # replay is deterministic: same range, same rows
-    assert mid == list(r.readBetweenOffsets({"version": 0}, {"version": 1}))
+
+    def keys(parts) -> list[int]:
+        return sorted(k for p in parts for b in r.read(p) for k in b.column(0).to_pylist())
+
+    assert keys(r.partitions(r.initialOffset(), end)) == [
+        k for v in range(3) for k in range(v * 10, v * 10 + 5)
+    ]
+    mid = r.partitions({"version": 0}, {"version": 1})
+    assert mid and all(f"{os.sep}commit-1{os.sep}" in p.path for p in mid)
+    assert keys(mid) == list(range(10, 15))
+    # replay is deterministic: same range, same files
+    assert [p.path for p in mid] == [
+        p.path for p in r.partitions({"version": 0}, {"version": 1})
+    ]
 
 
 def test_pyds_batch_pushdown_matches_unfiltered(spark, tmp_path):

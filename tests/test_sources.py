@@ -423,55 +423,13 @@ def test_latest_version_default_on_empty_lake(tmp_path):
 
 
 def test_stream_reader_empty_lake_reports_no_data(tmp_path):
-    """SnapshotCommitStreamReader.read on an uncommitted lake yields
-    an empty batch at offset {"version": -1} (ADVICE r2)."""
-    from uber_data_pipeline_spark.sources.pyds import SnapshotCommitStreamReader
+    """The commit-stream reader on an uncommitted lake reports offset
+    {"version": -1}, and the range up to it plans no partition."""
+    from uber_data_pipeline_spark.sources.pyds import SnapshotCommitPartitionedReader
 
-    r = SnapshotCommitStreamReader({"root": str(tmp_path / "lake")})
-    rows, offset = r.read(r.initialOffset())
-    assert list(rows) == []
-    assert offset == {"version": -1}
-
-
-def test_partitioned_and_simple_stream_readers_agree(spark, tmp_path):
-    """The partition-based (executor-side) and simple (driver-side)
-    commit-stream readers share the offset protocol and must drain
-    identical rows from the same lake."""
-    from uber_data_pipeline_spark.sources import pyds
-    from uber_data_pipeline_spark.sources.snapshots import commit_snapshot
-
-    root = str(tmp_path / "lake")
-    orders = load_table(spark, SF_DIR, "orders").select(
-        "o_orderkey", "o_orderstatus", "o_totalprice"
-    ).limit(200)
-    half = orders.filter(F.col("o_orderkey") % 2 == 0)
-    other = orders.subtract(half)
-    commit_snapshot(half, root, 0, mode="append")
-    commit_snapshot(other, root, 1, mode="append")
-
-    pyds.register_stream(spark)
-
-    def drain(variant: str) -> set:
-        reader = spark.readStream.format("snapshot_commits").option("root", root)
-        if variant == "simple":
-            reader = reader.option("reader", "simple")
-        name = f"pyds_agree_{variant}"
-        q = (
-            reader.load()
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", str(tmp_path / f"ckpt_{variant}"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        return {tuple(r) for r in spark.table(name).collect()}
-
-    got_part = drain("partitioned")
-    got_simple = drain("simple")
-    assert got_part == got_simple
-    assert len(got_part) == 200
+    r = SnapshotCommitPartitionedReader({"root": str(tmp_path / "lake")})
+    assert r.latestOffset() == {"version": -1}
+    assert list(r.partitions(r.initialOffset(), r.latestOffset())) == []
 
 
 def test_ensure_staged_rebuilds_on_source_change(tmp_path):

@@ -3,7 +3,7 @@ capabilities of kimiko-dev/Uber-Data-Pipeline, re-expressed Spark-first.
 
 Layout:
     session    -- tuned SparkSession factory
-    catalog    -- star-schema table loading / view registration
+    catalog    -- star-schema table loading
     functions/ -- column-level helpers (datetime, text, vectors)
     operators/ -- reusable DataFrame->DataFrame operators
     queries/   -- named analytical queries (reference-parity, TPC-H,
@@ -14,6 +14,6 @@ Layout:
 """
 
 from uber_data_pipeline_spark.session import get_spark
-from uber_data_pipeline_spark.catalog import load_tables, TABLES
+from uber_data_pipeline_spark.catalog import TABLES
 
-__all__ = ["get_spark", "load_tables", "TABLES"]
+__all__ = ["get_spark", "TABLES"]

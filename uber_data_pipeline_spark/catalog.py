@@ -1,4 +1,4 @@
-"""Star-schema catalog: load the test tables and register views.
+"""Star-schema catalog: load the test tables as DataFrames.
 
 Mirrors the reference's dbt ``sources.yml`` (3 BigQuery source
 tables) generalized to the 10-table star schema the driver generates.
@@ -27,12 +27,6 @@ TABLES = (
     "embeddings",
 )
 
-# dimension tables small enough to broadcast at any SF we target;
-# queries hint these explicitly so plans survive stats misestimates.
-BROADCAST_DIMS = frozenset({"region", "nation"})
-
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Table ``name`` of ``sf_dir`` with the schema its files declare.
@@ -55,16 +49,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         return normalize_events(read_parquet_inferred(spark, path))
     return read_parquet_inferred(spark, path)
 
-
-def load_tables(
-    spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR, register_views: bool = True
-) -> dict[str, DataFrame]:
-    """Load every table as a DataFrame; optionally register temp views
-    so ``spark.sql`` queries see them by name."""
-    out: dict[str, DataFrame] = {}
-    for name in TABLES:
-        df = load_table(spark, sf_dir, name)
-        if register_views:
-            df.createOrReplaceTempView(name)
-        out[name] = df
-    return out

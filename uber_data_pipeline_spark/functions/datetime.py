@@ -1,15 +1,12 @@
-"""Datetime column helpers.
+"""Month names as SQL.
 
 The reference maps month numbers to English names with a CASE
-expression (pickup_count_vs_average_per_base.sql:7-14); we use a
-literal array lookup (locale-independent, unlike date_format 'MMMM')
-so results match the oracle CASE byte-for-byte.
+expression (pickup_count_vs_average_per_base.sql:7-14). The uber
+models and their DuckDB oracles share this CASE text, which is
+locale-independent, unlike date_format 'MMMM'.
 """
 
 from __future__ import annotations
-
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 
 MONTH_NAMES = (
     "January",
@@ -26,17 +23,8 @@ MONTH_NAMES = (
     "December",
 )
 
-# reusable SQL CASE for oracles (DuckDB side)
+# month name of the 1-based month number in {col}; valid in Spark SQL and DuckDB
 MONTH_NAME_CASE_SQL = "CASE " + " ".join(
     f"WHEN {{col}} = {i + 1} THEN '{name}'" for i, name in enumerate(MONTH_NAMES)
 ) + " END"
 
-
-def month_num(ts: Column | str) -> Column:
-    return F.month(ts)
-
-
-def month_name(month_number: Column | str) -> Column:
-    """English month name from a 1-based month number."""
-    names = F.array(*[F.lit(n) for n in MONTH_NAMES])
-    return F.element_at(names, F.col(month_number) if isinstance(month_number, str) else month_number)

@@ -1,8 +1,3 @@
-from uber_data_pipeline_spark.operators.topk import top_k, top_k_per_group
-from uber_data_pipeline_spark.operators.shares import (
-    with_share_of_total,
-    with_partition_avg,
-)
 from uber_data_pipeline_spark.operators.sessions import sessionize
 from uber_data_pipeline_spark.operators.joins import salted_join
 from uber_data_pipeline_spark.operators.dedup import (
@@ -19,10 +14,6 @@ from uber_data_pipeline_spark.operators.similarity import (
 )
 
 __all__ = [
-    "top_k",
-    "top_k_per_group",
-    "with_share_of_total",
-    "with_partition_avg",
     "sessionize",
     "salted_join",
     "connected_components",

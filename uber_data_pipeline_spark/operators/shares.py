@@ -1,51 +1,12 @@
-"""Share-of-total and group-vs-average operators.
-
-Reference parity:
-- share of partition total → pickup_percentile_by_base_per_month.sql
-  (count per base per month / count per month * 100). The reference
-  computes the denominator with a correlated subquery; on Spark that
-  is a window sum over the already-aggregated rows — one extra
-  exchange over ~|groups| rows instead of a second scan of the fact.
-- partition average → pickup_count_vs_average_per_base.sql
-  (AVG(COUNT(*)) OVER (PARTITION BY month)).
-
-Scale: both windows run over aggregated rows (cardinality = number of
-groups, not raw rows), partitioned by bounded keys — no skew risk.
+"""Aggregate-statistics operators over reduced relations: a
+decimal-exact correlation matrix from one moments pass, an exact
+join-size and skew forecast that never runs the join, and a per-key
+skew report. Each has a DuckDB SQL twin for its oracle.
 """
 
 from __future__ import annotations
 
-from collections.abc import Sequence
-
-from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-
-def with_share_of_total(
-    df: DataFrame,
-    partition_by: Sequence[str],
-    value_col: str,
-    out_col: str,
-    as_percent: bool = True,
-    round_to: int | None = 6,
-) -> DataFrame:
-    w = Window.partitionBy(*partition_by)
-    share = F.col(value_col) / F.sum(value_col).over(w)
-    if as_percent:
-        share = share * F.lit(100.0)
-    if round_to is not None:
-        share = F.round(share, round_to)
-    return df.withColumn(out_col, share)
-
-
-def with_partition_avg(
-    df: DataFrame,
-    partition_by: Sequence[str],
-    value_col: str,
-    out_col: str,
-) -> DataFrame:
-    w = Window.partitionBy(*partition_by)
-    return df.withColumn(out_col, F.avg(value_col).over(w))
 
 
 # ----------------------------------------------------- moments / corr

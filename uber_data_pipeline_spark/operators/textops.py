@@ -1615,18 +1615,18 @@ def udtf_top_bigrams(docs: DataFrame, top_k: int = UDTF_TOP_BIGRAMS) -> DataFram
 
     spark = docs.sparkSession
     spark.udtf.register("udp_bigram_udtf", BigramUDTF)
-    spread_rowlocal(docs.select("doc_id", "text")).createOrReplaceTempView(
-        "udp_udtf_docs"
-    )
-    return spark.sql(f"""
+    return spark.sql(
+        f"""
         SELECT gram,
                CAST(COUNT(*) AS BIGINT) AS n,
                CAST(COUNT(DISTINCT g.doc_id) AS BIGINT) AS doc_freq
-        FROM udp_udtf_docs d, LATERAL udp_bigram_udtf(d.doc_id, d.text) g
+        FROM {{d}} d, LATERAL udp_bigram_udtf(d.doc_id, d.text) g
         GROUP BY gram
         ORDER BY n DESC, gram ASC
         LIMIT {top_k}
-    """)
+        """,
+        d=spread_rowlocal(docs.select("doc_id", "text")),
+    )
 
 
 def sql_udtf_top_bigrams(

@@ -3,9 +3,11 @@ selective refresh — the Dagster-asset-graph role
 (/root/reference/Dagster_Files/definitions.py: airbyte assets feed
 dbt assets on a @daily schedule).
 
-Each materialized model is written as parquet and registered as a
-temp view so downstream models read the MATERIALIZED result (one
-build per model per run, dbt semantics), not a re-derived plan.
+Each materialized model is written as parquet and its read-back is
+the frame downstream models are built over, so they read the
+MATERIALIZED result (one build per model per run, dbt semantics), not
+a re-derived plan. Frames reach a model as arguments
+(:meth:`ModelRegistry.build`); no temp view is registered.
 """
 
 from __future__ import annotations
@@ -26,16 +28,6 @@ class BuildResult:
     n_rows: int
     seconds: float
     path: str
-
-
-def _register_sources(
-    spark: SparkSession, registry: ModelRegistry, models: list[Model], sf_dir: str
-) -> None:
-    """Register a temp view for each source table the given models
-    name in their deps (deps that are not models are source tables)."""
-    sources = {d for m in models for d in m.deps if d not in registry.models}
-    for name in sorted(sources):
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)
 
 
 def _written_rows(path: str) -> int:
@@ -63,41 +55,46 @@ def run_dag(
     the sibling jobs across the executor pool).
 
     Only the source tables the models name in their ``deps`` are
-    loaded and registered as views (a dbt run resolves just the
-    ``source()`` relations its models reference), so ``sf_dir`` needs
-    to hold only those tables. A materialized model is read back with
-    the schema of the frame that wrote it, so neither step runs a
-    schema-inference job for a schema the engine already knows.
+    loaded (a dbt run resolves just the ``source()`` relations its
+    models reference), so ``sf_dir`` needs to hold only those tables.
+    A materialized model is read back with the schema of the frame
+    that wrote it, so neither step runs a schema-inference job for a
+    schema the engine already knows. The sources and the read-backs
+    reach each model as arguments: the session's temp views are the
+    same after the run as before it.
 
     ``BuildResult.n_rows`` is the sum of ``num_rows`` over the footers
     of the files a model's write produced, so counting runs no Spark
     job."""
     from concurrent.futures import ThreadPoolExecutor
 
-    levels = registry.topo_levels()
-    _register_sources(spark, registry, [m for level in levels for m in level], sf_dir)
+    frames = {t: load_table(spark, sf_dir, t) for t in registry.sources()}
 
-    def build_one(model) -> BuildResult:
+    def build_one(model: Model) -> tuple[BuildResult, DataFrame]:
         t0 = time.perf_counter()
-        df: DataFrame = model.build(spark)
+        df = registry.build(spark, model.name, frames)
         path = os.path.join(out_dir, model.name)
         df.write.mode("overwrite").parquet(path)
         n_rows = _written_rows(path)
-        spark.read.schema(df.schema).parquet(path).createOrReplaceTempView(model.name)
-        return BuildResult(
+        read_back = spark.read.schema(df.schema).parquet(path)
+        result = BuildResult(
             model=model.name,
             n_rows=n_rows,
             seconds=round(time.perf_counter() - t0, 3),
             path=path,
         )
+        return result, read_back
 
     results: list[BuildResult] = []
-    for level in levels:
+    for level in registry.topo_levels():
         if len(level) == 1:
-            results.append(build_one(level[0]))
-            continue
-        with ThreadPoolExecutor(max_workers=min(8, len(level))) as pool:
-            results.extend(pool.map(build_one, level))
+            built = [build_one(level[0])]
+        else:
+            with ThreadPoolExecutor(max_workers=min(8, len(level))) as pool:
+                built = list(pool.map(build_one, level))
+        for result, read_back in built:
+            results.append(result)
+            frames[result.model] = read_back
     return results
 
 
@@ -134,17 +131,17 @@ def refresh_incremental(
     assert spec is not None, f"model {name} is not incremental"
     base_filter = f"{spec.event_col} < TIMESTAMP '{cutoff}'"
     delta_filter = f"{spec.event_col} >= TIMESTAMP '{cutoff}'"
-    _register_sources(spark, registry, [model], sf_dir)
+    frames = {t: load_table(spark, sf_dir, t) for t in registry.sources({name})}
 
     stored_path = os.path.join(out_dir, name)
     # 1) the previous scheduled run: full build of the base window
-    base = model.build(spark, incremental_filter=base_filter)
+    base = registry.build(spark, name, frames, incremental_filter=base_filter)
     base.write.mode("overwrite").parquet(stored_path)
 
     # 2) the refresh: delta partials only + monoid merge. Both reads
     # use the schema of the frame that wrote the files, as run_dag does.
     stored = spark.read.schema(base.schema).parquet(stored_path)
-    delta = model.build(spark, incremental_filter=delta_filter)
+    delta = registry.build(spark, name, frames, incremental_filter=delta_filter)
     merged = (
         stored.unionByName(delta)
         .groupBy(*spec.keys)

@@ -4,8 +4,10 @@ parquet.
 Mirrors the reference's dbt project layout (models that ``ref()``
 each other plus ``sources.yml`` tables,
 /root/reference/src/main/uber_transformations/models/udp_trans/) with
-Spark temp views playing the role of the warehouse relations: a
-model's SQL refers to its deps and to source tables by plain name.
+the caller's frames playing the role of the warehouse relations: a
+model's SQL refers to its deps and to source tables by plain name, and
+:meth:`ModelRegistry.build` binds each name to a frame as a CTE, so no
+name is looked up in the session catalog.
 """
 
 from __future__ import annotations
@@ -35,7 +37,7 @@ class IncrementalSpec:
 class Model:
     name: str
     deps: tuple[str, ...]
-    sql: str  # refers to deps and source tables as views by name, dbt-style
+    sql: str  # refers to deps and source tables by name, dbt-style
     description: str = ""
     # cron string — the Dagster ScheduleDefinition analog (the
     # reference runs its asset graph @daily,
@@ -43,13 +45,12 @@ class Model:
     schedule: str | None = None
     incremental: IncrementalSpec | None = None
 
-    def build(
-        self, spark: SparkSession, incremental_filter: str = "1=1"
-    ) -> DataFrame:
-        sql = self.sql
-        if self.incremental is not None:
-            sql = sql.format(incremental_filter=incremental_filter)
-        return spark.sql(sql)
+    def text(self, incremental_filter: str = "1=1") -> str:
+        """The model's SQL; an incremental model's placeholder is
+        filled with ``incremental_filter``."""
+        if self.incremental is None:
+            return self.sql
+        return self.sql.format(incremental_filter=incremental_filter)
 
 
 @dataclass
@@ -80,6 +81,56 @@ class ModelRegistry:
                 schedule=schedule,
                 incremental=incremental,
             )
+        )
+
+    def sources(self, select: set[str] | None = None) -> list[str]:
+        """Source tables (deps that are not models) of the selected
+        models and their upstreams, sorted."""
+        return sorted(
+            {d for m in self.topo_order(select) for d in m.deps if d not in self.models}
+        )
+
+    def build(
+        self,
+        spark: SparkSession,
+        name: str,
+        frames: dict[str, DataFrame],
+        incremental_filter: str = "1=1",
+    ) -> DataFrame:
+        """Model ``name`` over the caller's ``frames``: the one way a
+        model becomes a DataFrame.
+
+        Each dep named in ``frames`` becomes a CTE over that frame; a
+        dep that is a model and is not in ``frames`` is inlined as a
+        CTE of its own SQL, its deps resolved the same way; a source
+        table missing from ``frames`` raises KeyError. The model's SQL
+        runs unchanged under that prelude, ``WITH orders AS (SELECT *
+        FROM {orders}), ..., stg_pickups AS (<sql>) SELECT * FROM
+        (<sql>)``. ``spark.sql`` registers each frame under a
+        uuid-named view and drops it once the query is analysed, so the
+        session's temp views are the same before and after, and a
+        caller's own view named like a dep is never read.
+        ``incremental_filter`` fills the placeholder of model ``name``
+        only; inlined upstreams are full builds."""
+        ctes: dict[str, str] = {}
+
+        def bind(rel: str) -> None:
+            if rel in ctes:
+                return
+            if rel in frames:
+                ctes[rel] = f"SELECT * FROM {{{rel}}}"
+                return
+            model = self.models[rel]
+            for d in model.deps:
+                bind(d)
+            ctes[rel] = model.text()
+
+        for d in self.models[name].deps:
+            bind(d)
+        prelude = ", ".join(f"{rel} AS ({sql})" for rel, sql in ctes.items())
+        return spark.sql(
+            f"WITH {prelude} SELECT * FROM ({self.models[name].text(incremental_filter)})",
+            **{rel: frames[rel] for rel in ctes if rel in frames},
         )
 
     def topo_order(self, select: set[str] | None = None) -> list[Model]:
@@ -131,3 +182,4 @@ class ModelRegistry:
         for m in order:
             levels[depth[m.name]].append(m)
         return levels
+

@@ -1169,10 +1169,7 @@ def snapshot_stream_python_datasource(
     driver only lists commit versions and plans one InputPartition
     per commit FILE; `read()` executes on EXECUTORS and yields
     pyarrow RecordBatches — no row materializes on the driver, so
-    the source scales with the cluster, not driver memory. The
-    driver-side SimpleDataSourceStreamReader variant remains
-    available via .option("reader", "simple") and shares the offset
-    protocol (tests pin both paths to identical results)."""
+    the source scales with the cluster, not driver memory."""
     from uber_data_pipeline_spark.functions.numeric import dsum
     from uber_data_pipeline_spark.sources import pyds
     from uber_data_pipeline_spark.sources.snapshots import commit_snapshot

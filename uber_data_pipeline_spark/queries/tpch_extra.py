@@ -23,15 +23,12 @@ from uber_data_pipeline_spark.operators.shares import (
 )
 from uber_data_pipeline_spark.functions.numeric import davg, dsum, sql_davg, sql_dsum
 from uber_data_pipeline_spark.queries import tpch as _tpch
+from uber_data_pipeline_spark.queries.tpch import _revenue
 
 _REVENUE = "l_extendedprice * (1 - l_discount)"
 
 # declared priority domain (TPC-H enum) — discovery would cost a scan
 ORDER_PRIORITIES = ("1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW")
-
-
-def _revenue() -> F.Column:
-    return F.col("l_extendedprice") * (1 - F.col("l_discount"))
 
 
 def tpch_q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:

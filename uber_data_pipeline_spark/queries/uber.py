@@ -3,180 +3,47 @@ kimiko-dev/Uber-Data-Pipeline re-based onto the orders x customer x
 nation x region star schema (pickup fact = orders, base dim = nation,
 borough dim = region).
 
-Each query cites its reference model and keeps its exact relational
-shape (joins, grouping, window, filter, top-k semantics), expressed
-with the DataFrame API so Catalyst plans it (broadcast dims, partial
-aggregation, pushdown).
+Each entry builds its model from the registry of
+plans/uber_models.py, the same SQL the model DAG materializes: the
+source tables are loaded from ``sf_dir`` and passed in as frames, and
+the shared ``stg_pickups`` staging model is inlined as a CTE
+(:meth:`ModelRegistry.build`). Catalyst plans the SQL (broadcast dims,
+partial aggregation, pushdown).
 """
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from uber_data_pipeline_spark.catalog import load_table
-from uber_data_pipeline_spark.functions.datetime import MONTH_NAME_CASE_SQL, month_name
-from uber_data_pipeline_spark.operators.shares import (
-    with_partition_avg,
-    with_share_of_total,
-)
-from uber_data_pipeline_spark.operators.topk import top_k, top_k_per_group
+from uber_data_pipeline_spark.functions.datetime import MONTH_NAME_CASE_SQL
+from uber_data_pipeline_spark.plans.uber_models import build_registry
 
 # "Unter"/"Grun" analog: two nations in the AMERICA region ("Bronx" analog)
 _FILTER_NATIONS = ("NATION_1", "NATION_6")
 _FILTER_REGION = "AMERICA"
 
 
-def _orders_with_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """fact JOIN base-dim, the common prefix of every reference model
-    (raw_data_janjune_15 JOIN base_num_and_name)."""
-    orders = load_table(spark, sf_dir, "orders")
-    customer = load_table(spark, sf_dir, "customer").select(
-        "c_custkey", "c_nationkey", "c_name", "c_mktsegment"
-    )
-    nation = load_table(spark, sf_dir, "nation")
-    return orders.join(
-        customer, orders.o_custkey == customer.c_custkey
-    ).join(F.broadcast(nation), customer.c_nationkey == nation.n_nationkey)
+def _model(name: str) -> Callable[[SparkSession, str], DataFrame]:
+    """Registry entry for model ``name`` over the tables of ``sf_dir``."""
 
+    def query(spark: SparkSession, sf_dir: str) -> DataFrame:
+        registry = build_registry()
+        frames = {t: load_table(spark, sf_dir, t) for t in registry.sources({name})}
+        return registry.build(spark, name, frames)
 
-def top3_bases_by_pickups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top 3 'bases' (nations) by total 'pickups' (orders).
-
-    Reference: models/udp_trans/top_3_base_names_by_total_pickups.sql
-    (join + GROUP BY + ORDER BY COUNT DESC LIMIT 3). Tie-broken by
-    nation_key so the limit-3 set is deterministic.
-    """
-    agg = (
-        _orders_with_nation(spark, sf_dir)
-        .groupBy(F.col("n_nationkey").alias("nation_key"), F.col("n_name").alias("nation_name"))
-        .agg(F.count("*").alias("total_pickups"))
-    )
-    return top_k(agg, [F.desc("total_pickups"), F.asc("nation_key")], 3)
-
-
-def pickup_percentile_by_base_per_month(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Share (%) of each month's orders contributed by each nation.
-
-    Reference: models/udp_trans/pickup_percentile_by_base_per_month.sql.
-    The reference computes the per-month denominator with a correlated
-    subquery re-scanning the CTE; here it is a window SUM over the
-    aggregated rows — one scan of the fact table total.
-    """
-    counts = (
-        _orders_with_nation(spark, sf_dir)
-        .withColumn("month_num", F.month("o_orderdate"))
-        .groupBy("month_num", F.col("n_name").alias("nation_name"))
-        .agg(F.count("*").alias("pickups"))
-    )
-    return with_share_of_total(
-        counts, ["month_num"], "pickups", "pct_of_month", as_percent=True, round_to=6
-    ).select(
-        "nation_name",
-        "month_num",
-        month_name("month_num").alias("month_name"),
-        "pickups",
-        "pct_of_month",
-    )
-
-
-def top3_pickup_dates_per_base(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top 3 most common order dates per nation, RANK ties kept.
-
-    Reference: models/udp_trans/top_3_pickup_dates_per_base.sql
-    (RANK() OVER (PARTITION BY base ORDER BY COUNT(*) DESC), rank<=3).
-    Rank runs over pre-aggregated (nation, date) rows only.
-    """
-    counts = (
-        _orders_with_nation(spark, sf_dir)
-        .withColumn("pickup_date", F.to_date("o_orderdate"))
-        .groupBy(
-            F.col("n_nationkey").alias("nation_key"),
-            F.col("n_name").alias("nation_name"),
-            "pickup_date",
-        )
-        .agg(F.count("*").alias("cnt"))
-    )
-    ranked = top_k_per_group(
-        counts, ["nation_key"], [F.desc("cnt")], 3, method="rank", rank_col="rnk"
-    )
-    return ranked.select("nation_name", "nation_key", "rnk", "cnt", "pickup_date")
-
-
-def pickup_count_vs_average_per_base(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Monthly order count per nation vs the average across nations
-    for that month, with percentage difference.
-
-    Reference: models/udp_trans/pickup_count_vs_average_per_base.sql
-    (GROUP BY + AVG(COUNT(*)) OVER (PARTITION BY month)).
-    """
-    counts = (
-        _orders_with_nation(spark, sf_dir)
-        .withColumn("month_num", F.month("o_orderdate"))
-        .groupBy(F.col("n_name").alias("nation_name"), "month_num")
-        .agg(F.count("*").alias("monthly_count"))
-    )
-    avg = with_partition_avg(counts, ["month_num"], "monthly_count", "avg_for_month")
-    return avg.select(
-        "nation_name",
-        "month_num",
-        month_name("month_num").alias("month_name"),
-        "monthly_count",
-        "avg_for_month",
-        F.round(
-            (F.col("monthly_count") / F.col("avg_for_month") - 1) * 100, 6
-        ).alias("pct_difference"),
-    )
-
-
-def unter_grun_pickups_in_bronx(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Row-level detail: orders whose customer is in nation
-    {NATION_1, NATION_6} AND region AMERICA — the reference's
-    two-dim filtered detail scan (base_name IN ('Unter','Grun') AND
-    borough = 'Bronx').
-
-    Reference: models/udp_trans/unter_grun_pickups_in_bronx.sql
-    (3-way join + IN-list + equality filter).
-    """
-    region = load_table(spark, sf_dir, "region")
-    detail = (
-        _orders_with_nation(spark, sf_dir)
-        .join(F.broadcast(region), F.col("n_regionkey") == region.r_regionkey)
-        .filter(
-            F.col("n_name").isin(*_FILTER_NATIONS) & (F.col("r_name") == _FILTER_REGION)
-        )
-    )
-    return detail.select(
-        F.col("o_orderkey").alias("order_key"),
-        F.col("o_orderdate").alias("pickup_ts"),
-        F.col("n_name").alias("base_name"),
-        F.col("r_name").alias("borough"),
-        F.col("c_mktsegment").alias("zone"),
-    )
-
-
-def total_pickups_in_may_by_base(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Total orders per nation for calendar month May.
-
-    Reference: models/udp_trans/total_pickups_in_may_by_base.sql
-    (EXTRACT(MONTH)=5 filter + join + GROUP BY count).
-    """
-    return (
-        _orders_with_nation(spark, sf_dir)
-        .filter(F.month("o_orderdate") == 5)
-        .groupBy(F.col("n_name").alias("nation_name"))
-        .agg(F.count("*").alias("pickups_in_may"))
-        .orderBy(F.desc("pickups_in_may"), F.asc("nation_name"))
-    )
+    return query
 
 
 QUERIES = {
-    "top3_bases_by_pickups": top3_bases_by_pickups,
-    "pickup_percentile_by_base_per_month": pickup_percentile_by_base_per_month,
-    "top3_pickup_dates_per_base": top3_pickup_dates_per_base,
-    "pickup_count_vs_average_per_base": pickup_count_vs_average_per_base,
-    "unter_grun_pickups_in_bronx": unter_grun_pickups_in_bronx,
-    "total_pickups_in_may_by_base": total_pickups_in_may_by_base,
+    "top3_bases_by_pickups": _model("top_3_bases_by_total_pickups"),
+    "pickup_percentile_by_base_per_month": _model("pickup_percentile_by_base_per_month"),
+    "top3_pickup_dates_per_base": _model("top_3_pickup_dates_per_base"),
+    "pickup_count_vs_average_per_base": _model("pickup_count_vs_average_per_base"),
+    "unter_grun_pickups_in_bronx": _model("unter_grun_pickups_in_bronx"),
+    "total_pickups_in_may_by_base": _model("total_pickups_in_may_by_base"),
 }
 
 _MONTH_CASE = MONTH_NAME_CASE_SQL.format(col="month_num")

@@ -35,7 +35,6 @@ from pyspark.sql.datasource import (
     InputPartition,
     LessThan,
     LessThanOrEqual,
-    SimpleDataSourceStreamReader,
 )
 
 from uber_data_pipeline_spark.session import tune_runtime
@@ -127,72 +126,21 @@ def register(spark) -> None:
 STREAM_FORMAT_NAME = "snapshot_commits"
 
 
-class SnapshotCommitStreamReader(SimpleDataSourceStreamReader):
-    """Streaming reader over the snapshot commit log: offset =
-    {"version": last-consumed-commit}; each micro-batch drains the
-    commits published since — the change-feed role of a table
-    format's commit stream, on the plain-parquet manifest lake.
-
-    SimpleDataSourceStreamReader reads on the DRIVER by contract (the
-    offset-tracking variant for small control-plane feeds); rows are
-    materialized per batch because Spark's prefetch cache replays the
-    iterator via copy() — a generator would break failure recovery.
-    High-throughput feeds belong on DataSourceStreamReader, where
-    `partitions(start, end)` plans one partition per commit FILE and
-    executors read in parallel — the offset protocol stays identical.
-    ``readBetweenOffsets`` makes recovery deterministic: a restarted
-    batch re-reads exactly its commit range.
-    """
-
-    def __init__(self, options: dict):
-        self.root = options["root"]
-
-    def initialOffset(self) -> dict:
-        return {"version": -1}
-
-    def _commit_rows(self, v: int) -> Iterator[tuple]:
-        import pyarrow.parquet as pq
-
-        d = os.path.join(self.root, "data", f"commit-{v}")
-        for f in sorted(os.listdir(d)):
-            if f.endswith(".parquet"):
-                for batch in pq.read_table(os.path.join(d, f)).to_batches():
-                    yield from zip(*[c.to_pylist() for c in batch.columns])
-
-    def _latest(self) -> int:
-        from uber_data_pipeline_spark.sources.snapshots import latest_version
-
-        # default=-1: a stream started before the first commit yields
-        # an empty batch at offset {"version": -1} instead of crashing
-        return latest_version(self.root, default=-1)
-
-    def read(self, start: dict):
-        latest = self._latest()
-        rows: list[tuple] = []
-        for v in range(start["version"] + 1, latest + 1):
-            rows.extend(self._commit_rows(v))
-        return iter(rows), {"version": latest}
-
-    def readBetweenOffsets(self, start: dict, end: dict) -> Iterator[tuple]:
-        for v in range(start["version"] + 1, end["version"] + 1):
-            yield from self._commit_rows(v)
-
-
 class _CommitFilePartition(InputPartition):
     def __init__(self, path: str):
         self.path = path
 
 
 class SnapshotCommitPartitionedReader(DataSourceStreamReader):
-    """Partition-based streaming reader over the commit log — the
-    high-throughput form of :class:`SnapshotCommitStreamReader`. The
-    OFFSET protocol is identical ({"version": last-consumed-commit});
-    what changes is WHERE the data moves: the driver only lists
-    commit versions (`latestOffset`) and plans one InputPartition per
-    commit FILE (`partitions`), and `read()` runs on EXECUTORS,
-    yielding pyarrow RecordBatches straight into Spark's columnar
-    pipeline. No row ever materializes on the driver, so the feed is
-    no longer bounded by driver memory — this is the 100 TB shape of
+    """Partition-based streaming reader over the commit log: offset =
+    {"version": last-consumed-commit}; each micro-batch drains the
+    commits published since — the change-feed role of a table
+    format's commit stream, on the plain-parquet manifest lake. The
+    driver only lists commit versions (`latestOffset`) and plans one
+    InputPartition per commit FILE (`partitions`), and `read()` runs
+    on EXECUTORS, yielding pyarrow RecordBatches straight into Spark's
+    columnar pipeline. No row ever materializes on the driver, so the
+    feed is not bounded by driver memory — this is the 100 TB shape of
     a change-feed source. Recovery is deterministic by construction:
     a restarted batch re-plans exactly the same [start+1, end] commit
     range, and commit files are immutable."""
@@ -207,7 +155,7 @@ class SnapshotCommitPartitionedReader(DataSourceStreamReader):
         from uber_data_pipeline_spark.sources.snapshots import latest_version
 
         # default=-1: before the first commit the stream reports "no
-        # new data" instead of crashing (see SnapshotCommitStreamReader)
+        # new data" instead of crashing
         return {"version": latest_version(self.root, default=-1)}
 
     def partitions(self, start: dict, end: dict) -> Sequence[InputPartition]:
@@ -240,22 +188,7 @@ class SnapshotCommitStreamSource(DataSource):
         return "o_orderkey bigint, o_orderstatus string, o_totalprice double"
 
     def streamReader(self, schema) -> DataSourceStreamReader:
-        # default: the executor-parallel partition-based reader; pass
-        # .option("reader", "simple") to exercise the driver-side
-        # offset-tracking variant (Spark falls back to
-        # simpleStreamReader when this raises NotImplementedError —
-        # see pyspark.sql.datasource_internal._streamReader)
-        if self.options.get("reader", "").lower() == "simple":
-            from pyspark.errors import PySparkNotImplementedError
-
-            raise PySparkNotImplementedError(
-                errorClass="NOT_IMPLEMENTED",
-                messageParameters={"feature": "streamReader"},
-            )
         return SnapshotCommitPartitionedReader(dict(self.options))
-
-    def simpleStreamReader(self, schema) -> SimpleDataSourceStreamReader:
-        return SnapshotCommitStreamReader(dict(self.options))
 
 
 def register_stream(spark) -> None:
