@@ -7,6 +7,7 @@ import os
 
 from pyspark.sql import functions as F
 
+import __spark_entry__ as entrymod
 from tests.conftest import SF_DIR, spark_jobs
 from uber_data_pipeline_spark.catalog import load_table
 from uber_data_pipeline_spark.sources.cdc import (
@@ -130,6 +131,16 @@ def test_warm_construction_runs_no_job(spark):
         fn(spark, SF_DIR)
     jobs = {name: spark_jobs(spark, lambda: fn(spark, SF_DIR))[1] for name, fn in fns.items()}
     assert {name for name, n in jobs.items() if n} == CONSTRUCT_JOBS_ALLOWED, jobs
+
+
+def test_warm_lsh_index_reads_run_no_job(spark):
+    """The LSH index entries read their stored sigs and bands with the
+    cached schema: a warm construction runs no job (it ran 2, one
+    schema inference per index read)."""
+    fns = entrymod.queries()
+    for name in ("dedup_lsh_index_reuse", "dedup_incremental_delta"):
+        fns[name](spark, SF_DIR)
+        assert spark_jobs(spark, lambda: fns[name](spark, SF_DIR))[1] == 0, name
 
 
 def test_csv_quarantine_split(spark, tmp_path):

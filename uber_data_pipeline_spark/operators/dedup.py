@@ -38,6 +38,7 @@ from uber_data_pipeline_spark.functions.text import (
     TOKENS_SPARK,
     shingles_spark,
 )
+from uber_data_pipeline_spark.sources.readers import read_parquet_inferred
 
 NUM_PERM = 16
 NUM_BANDS = 4
@@ -504,8 +505,8 @@ def lsh_pairs_from_index(
     The band self-join arrives pre-shuffled if the index was bucketed
     by band_key at write time; here the plain parquet read still
     skips the whole signature pipeline."""
-    sigs = spark.read.parquet(f"{index_dir}/sigs")
-    bands = spark.read.parquet(f"{index_dir}/bands")
+    sigs = read_parquet_inferred(spark, f"{index_dir}/sigs")
+    bands = read_parquet_inferred(spark, f"{index_dir}/bands")
     return _pairs_from_sigs_bands(sigs, bands, min_est_jaccard)
 
 
@@ -1214,8 +1215,8 @@ def lsh_pairs_incremental(
     probe joins (the index side arrives pre-partitioned if the index
     was bucketed by band_key at write time); verification joins hit
     only candidate ids."""
-    base_sigs = spark.read.parquet(f"{index_dir}/sigs")
-    base_bands = spark.read.parquet(f"{index_dir}/bands")
+    base_sigs = read_parquet_inferred(spark, f"{index_dir}/sigs")
+    base_bands = read_parquet_inferred(spark, f"{index_dir}/bands")
     delta_sigs = minhash_signatures(delta_docs).cache()
     delta_bands = lsh_bands(delta_sigs)
     all_bands = base_bands.unionByName(delta_bands)

@@ -1218,7 +1218,7 @@ def snapshot_stream_python_datasource(
         .start()
     )
     q.awaitTermination()
-    return (
+    out = (
         spark.table(name)
         .groupBy(F.col("o_orderstatus").alias("status"))
         .agg(
@@ -1226,6 +1226,10 @@ def snapshot_stream_python_datasource(
             dsum(F.col("o_totalprice")).alias("total_price"),
         )
     )
+    # the analysed plan holds the sink's rows; the view would keep them
+    # (and shadow a caller's view of that name) for the session's life
+    spark.catalog.dropTempView(name)
+    return out
 
 
 def orders_observed_load(spark: SparkSession, sf_dir: str) -> DataFrame:

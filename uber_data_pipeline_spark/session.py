@@ -8,9 +8,21 @@ tables broadcast, Arrow on for the few Pandas-UDF operators.
 
 from __future__ import annotations
 
+import functools
+import glob
+import hashlib
+import logging
 import os
+import shutil
+import subprocess
+import tempfile
 
+import pyspark
+from py4j.protocol import Py4JJavaError
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
+
+from uber_data_pipeline_spark.sources import staging
 
 # InferFiltersFromGenerate re-derives `size(arr) > 0 AND isnotnull(arr)`
 # below every explode; predicate pushdown then substitutes the FULL
@@ -32,6 +44,93 @@ EXCLUDED_OPTIMIZER_RULES = (
 # effect only when the context starts, so a caller-owned session
 # keeps Spark's 100.
 CODEGEN_CACHE_ENTRIES = 256
+
+# Without native libhadoop, Hadoop's local filesystem runs a `chmod`
+# process for every file and directory a write creates and a
+# `readlink` process per link-status lookup: 114 and 24 on a warm
+# elt_daily day. This class and its FileContext twin do both through
+# java.nio; everything else (checksums included) is Hadoop's own.
+_LOCAL_FS_SOURCE = os.path.join(os.path.dirname(__file__), "jvm", "NioLocalFileSystem.java")
+LOCAL_FS_CLASS = "uber_data_pipeline_spark.jvm.NioLocalFileSystem"
+
+log = logging.getLogger(__name__)
+
+
+@functools.cache
+def _local_fs_classes() -> str | None:
+    """The directory of the compiled local filesystem classes, or None
+    (logged once) when they cannot be had: no `javac`, a failed
+    compile, an unwritable artifact root.
+
+    Compiled once per source, `javac -version` and Hadoop API jar into
+    ``<ARTIFACT_ROOT>/local_fs/<hash>``: the build goes to a temporary
+    sibling that is renamed into place, and a published directory is
+    never rewritten, so a JVM never gets a partial one on its
+    classpath, even when two processes compile at once."""
+    javac = shutil.which("javac")
+    # the Spark the session launches: SPARK_HOME, else pyspark's own
+    spark_home = os.environ.get("SPARK_HOME") or os.path.dirname(pyspark.__file__)
+    jars = sorted(glob.glob(os.path.join(spark_home, "jars", "hadoop-client-api-*.jar")))
+    if javac is None or not jars:
+        log.warning("local filesystem: Hadoop's default, no javac or no hadoop-client-api jar")
+        return None
+    api = jars[-1]
+    tmp = None
+    try:
+        version = subprocess.run(
+            [javac, "-version"], capture_output=True, text=True, check=True
+        )
+        with open(_LOCAL_FS_SOURCE, "rb") as fh:
+            key = hashlib.sha256(
+                fh.read() + (version.stdout + version.stderr).encode()
+                + os.path.basename(api).encode()
+            ).hexdigest()[:16]
+        out = os.path.join(staging.ARTIFACT_ROOT, "local_fs", key)
+        if os.path.isdir(out):
+            return out
+        os.makedirs(os.path.dirname(out), exist_ok=True)
+        tmp = tempfile.mkdtemp(prefix=f".{key}-", dir=os.path.dirname(out))
+        subprocess.run(
+            [javac, "--release", "17", "-cp", api, "-d", tmp, _LOCAL_FS_SOURCE],
+            capture_output=True, text=True, check=True,
+        )
+        try:
+            os.rename(tmp, out)
+        except OSError:
+            if not os.path.isdir(out):  # else another process published it first
+                raise
+        return out
+    except (OSError, subprocess.CalledProcessError) as e:
+        detail = (getattr(e, "stderr", None) or str(e)).strip().splitlines()[0]
+        log.warning("local filesystem: Hadoop's default, %s", detail)
+        return None
+    finally:
+        if tmp is not None:
+            shutil.rmtree(tmp, ignore_errors=True)
+
+
+def _local_fs_conf(master: str) -> dict:
+    """The conf that installs the nio local filesystem for `file:`
+    paths. Empty when the classes are missing, when the JVM is already
+    running without them on its classpath (a caller-owned session keeps
+    what it has), and on a cluster master, whose executors would not
+    have them: in local mode every task runs in the driver JVM."""
+    if not master.startswith("local"):
+        return {}
+    classes = _local_fs_classes()
+    if classes is None:
+        return {}
+    jvm = SparkContext._jvm
+    if jvm is not None:
+        try:
+            jvm.java.lang.Class.forName(LOCAL_FS_CLASS)
+        except Py4JJavaError:  # ClassNotFoundException
+            return {}
+    return {
+        "spark.driver.extraClassPath": classes,
+        "spark.hadoop.fs.file.impl": LOCAL_FS_CLASS,
+        "spark.hadoop.fs.AbstractFileSystem.file.impl": LOCAL_FS_CLASS + "$Fs",
+    }
 
 
 def tune_runtime(spark: SparkSession) -> SparkSession:
@@ -101,6 +200,8 @@ def get_spark(
     return (
         SparkSession.builder.appName(app_name)
         .master(master)
+        # java.nio permissions and link checks for file: paths
+        .config(map=_local_fs_conf(master))
         # AQE: runtime partition coalescing, skew-join splitting,
         # dynamic join-strategy switch — essential at 100 TB.
         .config("spark.sql.adaptive.enabled", "true")
